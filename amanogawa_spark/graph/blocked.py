@@ -131,7 +131,10 @@ def blocked_pagerank(
     Convergence costs NO extra pass: each rank frame carries the previous
     iteration's rank as ``old_rank``, so the per-iteration dangling-mass
     action also returns the L1 delta of the last transition. ``tol <= 0``
-    (the default) keeps the historical fixed-``max_iter`` contract.
+    (the default) keeps the historical fixed-``max_iter`` contract. In
+    both modes ``delta`` is the L1 delta of the final transition (one
+    small aggregate after the loop when it ran to ``max_iter``), or -1.0
+    when no iteration ran.
 
     ``initial_ranks`` (id, rank) warm-starts the vector (normalized to
     unit mass, missing vertices filled uniformly). ``checkpoint``
@@ -278,8 +281,10 @@ def blocked_pagerank(
             else:
                 nxt = nxt.localCheckpoint(eager=True)
             ranks = nxt
-        # final transition's delta when the loop exhausted max_iter
-        if tol > 0 and it == max_iter and it > start_iter:
+        # the loop's stats action measures the transition BEFORE each
+        # step, so the final transition's delta needs one more pass when
+        # the loop exhausted max_iter (always, in fixed-iteration mode)
+        if it == max_iter and it > start_iter:
             delta = (
                 ranks.agg(
                     F.sum(F.abs(F.col("rank") - F.col("old_rank")))

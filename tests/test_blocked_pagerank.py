@@ -51,18 +51,18 @@ def _toy_graph(spark, n=120, block=30):
 
 def test_blocked_matches_classic_on_both_layouts(spark):
     v, e, clustered, rnd = _toy_graph(spark)
-    want = {
-        r["id"]: r["rank"]
-        for r in pagerank(v, e, tol=-1.0, max_iter=6).ranks.collect()
-    }
+    classic = pagerank(v, e, tol=-1.0, max_iter=6)
+    want = {r["id"]: r["rank"] for r in classic.ranks.collect()}
     for labels in (clustered, rnd):
-        got = {
-            r["id"]: r["rank"]
-            for r in blocked_pagerank(v, e, labels, max_iter=6).ranks.collect()
-        }
+        res = blocked_pagerank(v, e, labels, max_iter=6)
+        got = {r["id"]: r["rank"] for r in res.ranks.collect()}
         assert set(got) == set(want)
         for i in want:
             assert got[i] == pytest.approx(want[i], abs=1e-12), i
+        # fixed-iteration mode reports the FINAL transition's L1 delta,
+        # not the one before it
+        assert res.delta == pytest.approx(classic.delta, abs=1e-12)
+        assert res.delta != pytest.approx(classic.history[-2]["l1_delta"], abs=1e-12)
 
 
 def test_iteration_join_is_edge_stationary(spark):

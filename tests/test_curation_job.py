@@ -20,7 +20,11 @@ from pyspark.sql import functions as F
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 
-from run_curation_job import run  # noqa: E402
+from run_curation_job import (  # noqa: E402
+    pagerank_checkpoint_root,
+    pagerank_params,
+    run,
+)
 
 
 def _args(pages: str, work: str, out: str, **over) -> argparse.Namespace:
@@ -73,7 +77,10 @@ def test_resume_equals_uninterrupted(spark, tmp_path, pages_path):
     pages = spark.read.parquet(pages_path)
     v = build_vertices(pages, id_mode="hash")
     e = build_edges(pages, v)
-    ckpt = CheckpointManager(spark, str(work_b / "pagerank_ckpt"))
+    args_b = _args(pages_path, str(work_b), str(tmp_path / "out_b"))
+    ckpt = CheckpointManager(
+        spark, pagerank_checkpoint_root(str(work_b), pagerank_params(args_b))
+    )
     partial = pagerank(
         v.select("id"), e, tol=1e-6, max_iter=3, checkpoint=ckpt,
         checkpoint_every=1,
@@ -83,11 +90,10 @@ def test_resume_equals_uninterrupted(spark, tmp_path, pages_path):
     assert partial.delta > 1e-6  # genuinely unconverged at the kill point
 
     # --- resumed run over the same work dir
-    res = run(
-        _args(pages_path, str(work_b), str(tmp_path / "out_b")), spark=spark
-    )
-    # the PageRank stage resumed: total iterations recorded by the resumed
-    # run are fewer than the cold run's (it starts at the checkpoint)
+    res = run(args_b, spark=spark)
+    # the PageRank stage resumed at the checkpoint and reached the cold
+    # run's total iteration count
+    assert res["pagerank_resumed_from"] == 3
     assert res["pagerank_iterations"] == ref["pagerank_iterations"]
     got = _curated(spark, str(tmp_path / "out_b"))
     assert set(got) == set(want)
@@ -109,6 +115,23 @@ def test_second_invocation_skips_all_stages(spark, tmp_path, pages_path):
     third = run(_args(pages_path, work, out, max_tokens=256), spark=spark)
     assert third["stages"]["pack"]["skipped"] is False
     assert third["stages"]["pagerank"]["skipped"] is True
+
+
+def test_pagerank_param_change_restarts_from_iteration_zero(
+    spark, tmp_path, pages_path
+):
+    """A changed pagerank-stage param (here the vertex id space) must
+    recompute the stage from iteration 0, not resume the checkpoints an
+    earlier configuration left in the same work dir."""
+    work = str(tmp_path / "work_h")
+    out = str(tmp_path / "out_h")
+    first = run(_args(pages_path, work, out, max_iter=3), spark=spark)
+    assert first["pagerank_resumed_from"] == 0
+    assert first["pagerank_iterations"] == 3
+    second = run(_args(pages_path, work, out, max_iter=3, id_mode="dense"), spark=spark)
+    assert second["stages"]["pagerank"]["skipped"] is False
+    assert second["pagerank_resumed_from"] == 0
+    assert second["pagerank_iterations"] == 3
 
 
 def test_quality_gate_and_mixture_drop_rows(spark, tmp_path, pages_path):

@@ -65,21 +65,6 @@ def test_pagerank_resume_from_checkpoint(spark, graph, tmp_path):
     assert all("l1_delta" in m and "dangling_mass" in m for m in metrics)
 
 
-def test_pagerank_chunked_check_allclose(spark, graph):
-    """check_every=2 (the throughput path: in-plan dangling mass, one driver
-    action per 2 iterations) must still satisfy the north rule's
-    allclose(1e-6) — it may only overshoot convergence by <= 1 iteration."""
-    v, e, n, id_edges = graph
-    expected = pagerank_numpy(n, id_edges, tol=1e-6, max_iter=200)
-    res = pagerank(v, e, tol=1e-6, max_iter=200, check_every=2)
-    got = np.zeros(n)
-    for r in res.ranks.collect():
-        got[r.id] = r["rank"]
-    assert res.delta <= 1e-6
-    assert np.allclose(got, expected, atol=1e-6, rtol=0)
-    assert abs(got.sum() - 1.0) < 1e-9
-
-
 def test_pagerank_warm_start_converges_faster_same_fixpoint(spark, graph):
     """initial_ranks (incremental recrawl): fewer iterations, identical
     fixpoint within the north rule's allclose(1e-6)."""
@@ -93,15 +78,85 @@ def test_pagerank_warm_start_converges_faster_same_fixpoint(spark, graph):
 
 
 def test_pagerank_restores_aqe_conf(spark):
-    """The loop disables AQE for itself only — session conf must come back."""
+    """The loop disables AQE and pins the shuffle partition count for
+    itself only — the session conf must come back."""
     key = "spark.sql.adaptive.enabled"
+    parts = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
+    prev_parts = spark.conf.get(parts)
     spark.conf.set(key, "true")
     e = spark.createDataFrame([(0, 1), (1, 0)], "src_id long, dst_id long")
     v = spark.createDataFrame([(0,), (1,)], "id long")
     pagerank(v, e, tol=-1.0, max_iter=2)
     assert spark.conf.get(key) == "true"
+    assert spark.conf.get(parts) == prev_parts
+    pagerank(v, e, tol=-1.0, max_iter=2, num_partitions=3)
+    assert spark.conf.get(parts) == prev_parts
     spark.conf.set(key, prev)
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-|"))
+
+
+def _exchanges_below_join(plan: str, is_scan) -> tuple[int, list[str]]:
+    """(number of scans matching ``is_scan``, Exchange nodes found between
+    any such scan and its nearest join ancestor) in a physical plan tree
+    string."""
+    lines = plan.splitlines()
+    found, bad = 0, []
+    for i, line in enumerate(lines):
+        if not is_scan(line):
+            continue
+        found += 1
+        d = _depth(line)
+        for up in reversed(lines[:i]):
+            du = _depth(up)
+            if du >= d:
+                continue
+            d = du
+            node = up.lstrip(" :+-|*()0123456789")
+            if "Join" in node.split(" ")[0]:
+                break
+            if node.startswith("Exchange"):
+                bad.append(node)
+    return found, bad
+
+
+def test_pagerank_iteration_reuses_cached_edge_layout(spark, graph, monkeypatch):
+    """The per-iteration edges ⋈ ranks join must read the cached edge
+    layout in place: no Exchange between the edge table's
+    InMemoryTableScan and the join. The session runs with AQE on and more
+    shuffle partitions than the loop uses — the conditions under which a
+    layout persisted outside the loop conf gets re-shuffled every
+    iteration. Plans are captured at every localCheckpoint the run makes
+    (the loop's per-iteration lineage cut)."""
+    v, e, n, id_edges = graph
+    plans = []
+    cls = type(v)
+    real = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    pagerank(v, e, tol=-1.0, max_iter=4)
+    monkeypatch.undo()
+
+    def edge_scan(line: str) -> bool:
+        node = line.lstrip(" :+-|*()0123456789")
+        return node.startswith("InMemoryTableScan") and all(
+            c in node for c in ("src_id", "dst_id", "out_degree")
+        )
+
+    scans = 0
+    for plan in plans:
+        found, bad = _exchanges_below_join(plan, edge_scan)
+        scans += found
+        assert not bad, f"edge layout re-shuffled inside the iteration:\n{plan}"
+    assert scans > 0, "no iteration plan read the cached edge layout"
 
 
 def test_pagerank_weighted_allclose(spark):

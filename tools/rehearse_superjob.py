@@ -103,8 +103,9 @@ def main() -> None:
         k: {"seconds": v["seconds"], "rows": v["rows"]}
         for k, v in report["stages"].items()
     }
-    out["pagerank_iterations"] = report["pagerank_iterations"]
-    out["pagerank_delta"] = report["pagerank_delta"]
+    # absent (None) when a kept rehearsal skipped the finished pagerank stage
+    out["pagerank_iterations"] = report.get("pagerank_iterations")
+    out["pagerank_delta"] = report.get("pagerank_delta")
     out["curated_rows"] = report["curated_rows"]
 
     # per-iteration shuffle: pid layout vs classic on the same graph

@@ -28,6 +28,7 @@ Prints ONE JSON line: per-stage seconds, row counts, skipped flags.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -39,6 +40,26 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def _manifest_path(stage_dir: str) -> str:
     return stage_dir.rstrip("/") + ".manifest.json"
+
+
+def pagerank_params(args) -> dict:
+    """Manifest params of the pagerank stage. ``id_mode`` is among them:
+    ranks are keyed on vertex ids, so a new id space invalidates them."""
+    return {
+        "v": 1,
+        "tol": args.tol,
+        "max_iter": args.max_iter,
+        "layout": getattr(args, "layout", "classic"),
+        "id_mode": getattr(args, "id_mode", "hash"),
+    }
+
+
+def pagerank_checkpoint_root(work: str, params: dict) -> str:
+    """Mid-stage checkpoint root of the pagerank stage, keyed on its params
+    hash: a run with changed params starts from iteration 0 instead of
+    resuming another configuration's (possibly other id space's) ranks."""
+    key = hashlib.sha1(json.dumps(params, sort_keys=True).encode()).hexdigest()[:12]
+    return os.path.join(work, f"pagerank_ckpt_{key}")
 
 
 def run(args, spark=None) -> dict:
@@ -163,8 +184,11 @@ def run(args, spark=None) -> dict:
 
     # 5. PageRank to convergence — CheckpointManager makes every
     # checkpoint_every-th ITERATION durable; a mid-stage kill resumes there
+    pr_params = pagerank_params(args)
+
     def _pagerank():
-        ckpt = CheckpointManager(spark, os.path.join(args.work, "pagerank_ckpt"))
+        ckpt = CheckpointManager(spark, pagerank_checkpoint_root(args.work, pr_params))
+        report["pagerank_resumed_from"] = ckpt.latest_iteration() or 0
         if layout == "pid":
             n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
             prebuilt = (
@@ -195,11 +219,7 @@ def run(args, spark=None) -> dict:
         report["pagerank_delta"] = res.delta
         return res.ranks
 
-    ranks = stage(
-        "pagerank",
-        {"v": 1, "tol": args.tol, "max_iter": args.max_iter, "layout": layout},
-        _pagerank,
-    )
+    ranks = stage("pagerank", pr_params, _pagerank)
 
     # 6. quality gate + rank join (curation keeps scored, linked docs)
     def _quality():
