@@ -32,7 +32,12 @@ table every iteration. ``shuffle_partitions`` pins
 ``spark.sql.shuffle.partitions`` for the same scope, so the persisted
 layouts, the per-iteration aggregates and the state frame all hash to
 one partition count and the loop's joins stay narrow
-(``graph/pagerank.py``: ``loop_layout``).
+(``graph/pagerank.py``: ``scoped_layout``). With the partition count it
+also sets ``spark.sql.requireAllClusterKeysForCoPartition=false``: the
+pid-clustered layout (``graph/blocked.py``) joins on
+``(spid, salt, src_id)`` against sides hashed on ``(spid, salt)`` only,
+which Spark accepts as co-partitioned only under that setting. The
+classic layout's joins are single-key, so it cannot change their plans.
 
 The Spark conf is session-scoped: a concurrent query on another thread
 of the SAME session during the loop would also run under these
@@ -48,6 +53,7 @@ from pyspark.sql import SparkSession
 
 _AQE = "spark.sql.adaptive.enabled"
 _PARTS = "spark.sql.shuffle.partitions"
+_COPART = "spark.sql.requireAllClusterKeysForCoPartition"
 
 
 @contextmanager
@@ -61,6 +67,7 @@ def iteration_conf(
         pinned[_AQE] = "false"
     if shuffle_partitions is not None:
         pinned[_PARTS] = str(shuffle_partitions)
+        pinned[_COPART] = "false"
     prev = {k: spark.conf.get(k, None) for k in pinned}
     for k, v in pinned.items():
         spark.conf.set(k, v)

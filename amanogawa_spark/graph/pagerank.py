@@ -3,20 +3,26 @@
 Semantics (north rule): damping 0.85, dangling-mass redistribution,
 L1-delta convergence (default 1e-6), per-vertex scores.
 
-Scale design (SURVEY.md §4.2):
+Scale design (SURVEY.md §4.2) — one loop, two layouts:
 - the partition count is chosen FIRST (>=250k edges per partition, capped
-  at ``spark.sql.shuffle.partitions``), then :func:`loop_layout` builds
+  at ``spark.sql.shuffle.partitions``), then :func:`scoped_layout` builds
   the two persisted layouts under the loop's own conf (AQE off, shuffle
-  partitions = that count): the degree-annotated edge table hashed on
-  ``src_id`` and the vertex table hashed on ``id``. Built that way the
-  cached relations expose their ``HashPartitioning``, so the planner sees
-  both per-iteration joins as co-partitioned. (Persisted under AQE they
-  cache an ``AdaptiveSparkPlan`` that hides its partitioning, and every
-  iteration re-shuffles the whole edge table.)
-- the loop carries ONE state frame ``(id, dang, rank)`` hashed on ``id``.
-  Per iteration the only shuffle is the ``groupBy(dst_id)`` partial+final
-  hash aggregate of the contributions — O(V) rows; ``edges ⋈ state`` and
-  ``state ⋈ contributions`` are both narrow.
+  partitions = that count). Built that way the cached relations expose
+  their ``HashPartitioning``, so the planner sees the per-iteration joins
+  as co-partitioned. (Persisted under AQE they cache an
+  ``AdaptiveSparkPlan`` that hides its partitioning, and every iteration
+  re-shuffles the whole edge table.)
+- a layout is an edge table, a vertex table hashed on ``id`` and a
+  contributions step. The classic layout (:func:`loop_layout`) hashes the
+  degree-annotated edge table on ``src_id`` and joins the state to it
+  narrowly on ``src_id``; the pid-clustered layout (``graph/blocked.py``)
+  hashes it on ``(spid, salt)`` and re-hashes the state to match.
+- :func:`power_iterate` is the ONE iteration loop (``pagerank``,
+  ``personalized_pagerank``, ``blocked_pagerank``). It carries one state
+  frame ``(id, dang, [extra...], rank)`` hashed on ``id``. Per iteration
+  the only shuffle on the classic layout is the ``groupBy(dst_id)``
+  partial+final hash aggregate of the contributions — O(V) rows;
+  ``edges ⋈ state`` and ``state ⋈ contributions`` are both narrow.
 - every iteration is one small plan of fixed size and ONE job: the next
   state (with ``old_rank`` carried along) is materialized and truncated by
   an eager ``localCheckpoint``, and the L1 delta and the NEXT iteration's
@@ -38,7 +44,7 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -63,10 +69,58 @@ class PageRankResult:
 
 @dataclass
 class LoopLayout:
-    edges: DataFrame  # (src_id, dst_id, out_degree[, weight]) hashed on src_id
-    verts: DataFrame  # (id, dang) hashed on id
+    edges: DataFrame  # persisted edge table
+    verts: DataFrame  # (id, dang[, layout columns]) hashed on id
     n: int  # vertex count
     n_dangling: int
+    # state -> (id, in_mass): rank pushed along the cached out-edges
+    contributions: Callable[[DataFrame], DataFrame]
+
+
+@contextmanager
+def scoped_layout(
+    edges: DataFrame,
+    num_partitions: int | None,
+    adaptive: bool,
+    build: Callable[
+        [int], tuple[DataFrame, DataFrame, Callable[[DataFrame], DataFrame]]
+    ],
+) -> Iterator[LoopLayout]:
+    """Persisted edge and vertex layouts for a PageRank-shaped loop, with
+    the loop conf in force for the whole ``with`` block.
+
+    The partition count is ``num_partitions``, else one per
+    ``EDGES_PER_PARTITION`` edges capped at the session's shuffle
+    partitions. The conf (AQE off unless ``adaptive``, shuffle partitions
+    pinned to that count) is entered BEFORE ``build(n_part)`` runs, so the
+    cached relations report their ``HashPartitioning`` with exactly the
+    partition count the loop's own exchanges use — the precondition for
+    narrow per-iteration joins. ``build`` returns the edge table, the
+    vertex table (``id``, ``dang`` = 1.0 for vertices without out-edges,
+    plus any layout columns; hashed on ``id`` here) and the contributions
+    step over the edge table. The edge table is persisted first, so a
+    vertex table derived from it reads its cache. Both caches are released
+    and the conf restored on exit; results handed out of the block must
+    already be materialized (``localCheckpoint``) or they recompute from
+    the sources.
+    """
+    spark = edges.sparkSession
+    n_part = num_partitions
+    if n_part is None:
+        session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_part = min(session, max(2, edges.count() // EDGES_PER_PARTITION + 1))
+    with iteration_conf(spark, disable_aqe=not adaptive, shuffle_partitions=n_part):
+        edges_w, verts, contributions = build(n_part)
+        edges_w.persist(StorageLevel.MEMORY_AND_DISK)
+        verts = verts.repartition(n_part, "id").persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            # one job materializes the vertex cache; the edge cache fills
+            # inside the first job that reads it
+            n, n_dang = verts.agg(F.count("*"), F.sum("dang")).collect()[0]
+            yield LoopLayout(edges_w, verts, int(n), int(n_dang or 0), contributions)
+        finally:
+            edges_w.unpersist()
+            verts.unpersist()
 
 
 @contextmanager
@@ -77,25 +131,13 @@ def loop_layout(
     adaptive: bool = False,
     weight_col: str | None = None,
 ) -> Iterator[LoopLayout]:
-    """Persisted edge and vertex layouts for a PageRank-shaped loop, with
-    the loop conf in force for the whole ``with`` block.
+    """The classic layout: the degree-annotated edge table hashed on
+    ``src_id`` and the ``(id, dang)`` vertex table hashed on ``id``, built
+    by :func:`scoped_layout`. ``out_degree`` is the out-edge count, or the
+    out-weight sum under ``weight_col``; the contributions step is the
+    narrow ``edges ⋈ state`` join on ``src_id``."""
 
-    The conf (AQE off unless ``adaptive``, shuffle partitions pinned to the
-    layout's partition count) is entered BEFORE the layouts are built, so
-    the cached relations report ``HashPartitioning`` on ``src_id`` / ``id``
-    with exactly the partition count the loop's own exchanges use — the
-    precondition for narrow per-iteration joins. ``out_degree`` is the
-    out-edge count, or the out-weight sum under ``weight_col``; ``dang`` is
-    1.0 for vertices without out-edges. Both caches are released and the
-    conf restored on exit; results handed out of the block must already be
-    materialized (``localCheckpoint``) or they recompute from the sources.
-    """
-    spark = vertices.sparkSession
-    n_part = num_partitions
-    if n_part is None:
-        session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n_part = min(session, max(2, edges.count() // EDGES_PER_PARTITION + 1))
-    with iteration_conf(spark, disable_aqe=not adaptive, shuffle_partitions=n_part):
+    def build(n_part: int):
         out_deg = edges.groupBy("src_id").agg(
             (
                 F.sum(F.col(weight_col).cast("double"))
@@ -108,24 +150,17 @@ def loop_layout(
             edges.select(*edge_cols)
             .join(out_deg, "src_id")
             .repartition(n_part, "src_id")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         verts = (
             vertices.select("id")
             .distinct()
             .join(out_deg.withColumnRenamed("src_id", "id"), "id", "left")
             .select("id", F.col("out_degree").isNull().cast("double").alias("dang"))
-            .repartition(n_part, "id")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        try:
-            # one job materializes the vertex cache; the edge cache fills
-            # inside the first iteration's job
-            n, n_dang = verts.agg(F.count("*"), F.sum("dang")).collect()[0]
-            yield LoopLayout(edges_w, verts, int(n), int(n_dang or 0))
-        finally:
-            edges_w.unpersist()
-            verts.unpersist()
+        return edges_w, verts, lambda s: _contributions(edges_w, s, "rank", weight_col)
+
+    with scoped_layout(edges, num_partitions, adaptive, build) as lay:
+        yield lay
 
 
 def _contributions(
@@ -170,14 +205,137 @@ def _dangling_mass() -> Column:
     return F.sum(F.col("rank") * F.col("dang"))
 
 
-def _advance(nxt: DataFrame) -> tuple[DataFrame, float, float]:
-    """Run an iteration's single job over ``nxt`` (carrying ``rank``,
-    ``old_rank``, ``dang``): returns (materialized state, L1 delta,
-    dangling mass of the new ranks)."""
-    state, (delta, dm) = _checkpoint_observing(
-        nxt, F.sum(F.abs(F.col("rank") - F.col("old_rank"))), _dangling_mass()
+def power_iterate(
+    lay: LoopLayout,
+    state: DataFrame,
+    dangling_mass: float,
+    rank_update: Callable[[Column, float], Column],
+    tol: float,
+    max_iter: int,
+    checkpoint: CheckpointManager | None = None,
+    checkpoint_every: int = 5,
+    initial_ranks: DataFrame | None = None,
+) -> PageRankResult:
+    """The PageRank iteration loop shared by every variant and layout.
+
+    ``state`` is the cold-start state ``(id, dang, [extra...], rank)``
+    hashed on ``id`` and ``dangling_mass`` its ``sum(rank * dang)``; the
+    extra columns (layout keys, a restart share) ride along unchanged.
+    ``rank_update(in_mass, dangling_mass)`` is the new rank Column: the
+    restart term plus the damped in-mass. Each iteration is ONE job: an
+    eager ``localCheckpoint`` of the next state whose L1 delta and next
+    dangling mass are observed in the same pass.
+
+    ``checkpoint`` resumes from its latest snapshot (vertices it misses
+    keep their cold-start rank) and writes one every ``checkpoint_every``
+    iterations; per-iteration metrics go to its journal. ``initial_ranks``
+    (id, rank) warm-starts a cold run. ``delta`` is the L1 delta of the
+    last transition, or -1.0 when none ran (e.g. a run resumed at
+    ``max_iter``).
+    """
+    keep = [c for c in state.columns if c != "rank"]
+    start_iter = 0
+    start = None
+    if checkpoint is not None:
+        last = checkpoint.latest_iteration()
+        if last is not None:
+            start = checkpoint.load(last)
+            start_iter = last
+    warm = start is None and initial_ranks is not None
+    if warm:
+        # warm start (incremental recrawl): yesterday's scores projected
+        # onto today's vertex set — new pages get their cold-start share,
+        # dropped pages vanish — renormalized below to unit mass so the
+        # dangling redistribution algebra stays exact. The fixpoint is
+        # unchanged (power iteration has a unique attractor); a nearby
+        # start only takes fewer iterations to reach it.
+        start = initial_ranks
+    if start is not None:
+        state, (mass, dangling_mass) = _checkpoint_observing(
+            state.join(start.select("id", F.col("rank").alias("_r0")), "id", "left")
+            .select(*keep, F.coalesce("_r0", "rank").alias("rank")),
+            F.sum("rank"),
+            _dangling_mass(),
+        )
+        if warm:
+            mass = mass or 1.0
+            state = state.select(*keep, (F.col("rank") / F.lit(mass)).alias("rank"))
+            dangling_mass /= mass
+
+    history: list[dict] = []
+    delta = float("inf")
+    it = start_iter
+    while it < max_iter and delta > tol:
+        t0 = time.time()
+        it += 1
+        nxt = state.join(
+            lay.contributions(state).hint("shuffle_hash"), "id", "left"
+        ).select(
+            *keep,
+            rank_update(F.coalesce("in_mass", F.lit(0.0)), dangling_mass).alias(
+                "rank"
+            ),
+            F.col("rank").alias("old_rank"),
+        )
+        state, (delta, dangling_mass) = _checkpoint_observing(
+            nxt, F.sum(F.abs(F.col("rank") - F.col("old_rank"))), _dangling_mass()
+        )
+        if checkpoint is not None and it % checkpoint_every == 0:
+            # written from the materialized state; the loop goes on
+            # from the local checkpoint, which keeps its partitioning
+            checkpoint.save(state.select("id", "rank"), it)
+        row = {
+            "iteration": it,
+            "l1_delta": float(delta),
+            "dangling_mass": float(dangling_mass),
+            "seconds": time.time() - t0,
+        }
+        history.append(row)
+        if checkpoint is not None:
+            checkpoint.log_metrics(
+                it,
+                l1_delta=row["l1_delta"],
+                dangling_mass=row["dangling_mass"],
+                seconds=row["seconds"],
+            )
+    return PageRankResult(
+        ranks=state.select("id", "rank"),
+        iterations=it,
+        delta=float(delta) if history else -1.0,
+        history=history,
     )
-    return state, delta, dm
+
+
+def layout_pagerank(
+    lay: LoopLayout,
+    damping: float,
+    tol: float,
+    max_iter: int,
+    checkpoint: CheckpointManager | None = None,
+    checkpoint_every: int = 5,
+    initial_ranks: DataFrame | None = None,
+) -> PageRankResult:
+    """Uniform-restart PageRank over any :class:`LoopLayout`:
+    r' = (1-d)/N + d * (A^T r/outdeg + dangling/N), r0 = 1/N."""
+    n = lay.n
+    if n == 0:
+        return PageRankResult(
+            ranks=lay.verts.select("id", F.lit(0.0).alias("rank")),
+            iterations=0,
+            delta=-1.0,
+        )
+    base = (1.0 - damping) / n
+    return power_iterate(
+        lay,
+        lay.verts.select("*", F.lit(1.0 / n).alias("rank")),
+        lay.n_dangling / n,
+        lambda in_mass, dm: F.lit(base) + F.lit(damping) * (in_mass + F.lit(dm / n)),
+        tol,
+        max_iter,
+        checkpoint,
+        checkpoint_every,
+        initial_ranks,
+    )
 
 
 def pagerank(
@@ -209,87 +367,9 @@ def pagerank(
     a cold run. ``adaptive=True`` keeps AQE on inside the loop.
     """
     with loop_layout(vertices, edges, num_partitions, adaptive, weight_col) as lay:
-        n = lay.n
-        if n == 0:
-            return PageRankResult(
-                ranks=lay.verts.select("id", F.lit(0.0).alias("rank")),
-                iterations=0,
-                delta=0.0,
-            )
-
-        start_iter = 0
-        start = None
-        if checkpoint is not None:
-            last = checkpoint.latest_iteration()
-            if last is not None:
-                start = checkpoint.load(last)
-                start_iter = last
-        warm = start is None and initial_ranks is not None
-        if warm:
-            # warm start (incremental recrawl): yesterday's scores projected
-            # onto today's vertex set — new pages get the uniform share,
-            # dropped pages vanish — renormalized below to unit mass so the
-            # dangling redistribution algebra stays exact. The fixpoint is
-            # unchanged (power iteration has a unique attractor); a nearby
-            # start only takes fewer iterations to reach it.
-            start = initial_ranks
-        if start is None:
-            state = lay.verts.select("id", "dang", F.lit(1.0 / n).alias("rank"))
-            dangling_mass = lay.n_dangling / n
-        else:
-            state = lay.verts.join(
-                start.select("id", F.col("rank").alias("_r0")), "id", "left"
-            ).select("id", "dang", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"))
-            state, (mass, dangling_mass) = _checkpoint_observing(
-                state, F.sum("rank"), _dangling_mass()
-            )
-            if warm:
-                mass = mass or 1.0
-                state = state.select(
-                    "id", "dang", (F.col("rank") / F.lit(mass)).alias("rank")
-                )
-                dangling_mass /= mass
-
-        base = (1.0 - damping) / n
-        history: list[dict] = []
-        delta = float("inf")
-        it = start_iter
-        while it < max_iter and delta > tol:
-            t0 = time.time()
-            it += 1
-            contribs = _contributions(lay.edges, state, "rank", weight_col)
-            nxt = state.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "dang",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce("in_mass", F.lit(0.0)) + F.lit(dangling_mass / n))
-                ).alias("rank"),
-                F.col("rank").alias("old_rank"),
-            )
-            state, delta, dangling_mass = _advance(nxt)
-            if checkpoint is not None and it % checkpoint_every == 0:
-                # written from the materialized state; the loop goes on
-                # from the local checkpoint, which keeps its partitioning
-                checkpoint.save(state.select("id", "rank"), it)
-            row = {
-                "iteration": it,
-                "l1_delta": float(delta),
-                "dangling_mass": float(dangling_mass),
-                "seconds": time.time() - t0,
-            }
-            history.append(row)
-            if checkpoint is not None:
-                checkpoint.log_metrics(
-                    it,
-                    l1_delta=row["l1_delta"],
-                    dangling_mass=row["dangling_mass"],
-                    seconds=row["seconds"],
-                )
-
-    ranks = state.select("id", "rank")
-    return PageRankResult(ranks=ranks, iterations=it, delta=float(delta), history=history)
+        return layout_pagerank(
+            lay, damping, tol, max_iter, checkpoint, checkpoint_every, initial_ranks
+        )
 
 
 def personalized_pagerank(
@@ -307,9 +387,9 @@ def personalized_pagerank(
     r' = (1-d)·s + d·(Aᵀ r/outdeg + dangling_mass·s), r₀ = s, where
     s_i = 1/|S| on the seed set and 0 elsewhere — random walks teleport
     back to the seeds, so scores measure proximity to them (the standard
-    seeded-relevance ranking over a link graph). Same execution shape as
-    :func:`pagerank` (same :func:`loop_layout`, one state frame that also
-    carries the restart value ``sv``, ONE driver action per iteration).
+    seeded-relevance ranking over a link graph). The loop is
+    :func:`power_iterate` over the classic :func:`loop_layout`; the state
+    carries the restart share ``sv``.
     """
     seed_ids = seeds.select("id").distinct()
     n_seeds = seed_ids.count()
@@ -322,36 +402,16 @@ def personalized_pagerank(
             .select("id", "dang", sv.alias("sv"), sv.alias("rank")),
             _dangling_mass(),
         )
-        history: list[dict] = []
-        delta = float("inf")
-        it = 0
-        while it < max_iter and delta > tol:
-            t0 = time.time()
-            it += 1
-            contribs = _contributions(lay.edges, state, "rank")
-            nxt = state.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "dang",
-                "sv",
-                (
-                    F.col("sv")
-                    * (F.lit(1.0 - damping) + F.lit(damping * dangling_mass))
-                    + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-                F.col("rank").alias("old_rank"),
-            )
-            state, delta, next_dangling = _advance(nxt)
-            history.append(
-                {
-                    "iteration": it,
-                    "l1_delta": float(delta),
-                    "dangling_mass": float(dangling_mass),
-                    "seconds": time.time() - t0,
-                }
-            )
-            dangling_mass = next_dangling
-    ranks = state.select("id", "rank")
-    return PageRankResult(ranks=ranks, iterations=it, delta=float(delta), history=history)
+        return power_iterate(
+            lay,
+            state,
+            dangling_mass,
+            lambda in_mass, dm: F.col("sv")
+            * (F.lit(1.0 - damping) + F.lit(damping * dm))
+            + F.lit(damping) * in_mass,
+            tol,
+            max_iter,
+        )
 
 
 def katz_centrality(

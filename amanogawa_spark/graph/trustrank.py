@@ -14,9 +14,11 @@ Reference parity: the reference engine's graph layer stops at uniform
 PageRank (``src/amanogawa`` has no seeded/trust variant); this module is
 an engine addition in the same iterative-DataFrame-join family,
 delegating the propagation to :func:`personalized_pagerank` so it
-inherits that loop's 100 TB plan shape verbatim (edges hash-partitioned
-and persisted once, ``shuffle_hash`` hints on the O(V) sides, one driver
-action per iteration, lineage truncation every 2 iterations).
+inherits the shared PageRank loop's plan shape verbatim (edges
+hash-partitioned and persisted once under the loop conf, narrow joins
+with ``shuffle_hash`` hints on the O(V) sides, one job per iteration:
+an eager localCheckpoint of the state that also observes the L1 delta
+and the dangling mass).
 """
 
 from __future__ import annotations

@@ -10,7 +10,8 @@ Pins three properties:
    ENSURE_REQUIREMENTS exchange for the join keys;
 3. the partial-aggregation locality win is real: on a block-local graph
    the clustered layout's contribution aggregation emits measurably
-   fewer map-side partial rows than the random layout.
+   fewer map-side partial rows than the random layout;
+4. the layout runs the shared PageRank loop: one Spark job per iteration.
 """
 
 from __future__ import annotations
@@ -180,3 +181,22 @@ def test_blocked_pagerank_warm_start_normalizes(spark):
     assert abs(got[0] - 10.0 / total) < 1e-12
     assert abs(got[1] - 30.0 / total) < 1e-12
     assert abs(sum(got.values()) - 1.0) < 1e-12
+
+
+def test_blocked_pagerank_runs_one_job_per_iteration(spark):
+    """Each iteration of the layout loop is ONE Spark job (the state's
+    eager localCheckpoint, with delta and dangling mass observed in the
+    same pass); the one-time layout build is amortized over the run.
+    Jobs are counted by job group, so nothing else in the session leaks
+    into the count."""
+    v, e, clustered, _ = _toy_graph(spark)
+    sc = spark.sparkContext
+    group = "blocked-jobs-per-iteration"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = blocked_pagerank(v, e, clustered, max_iter=50)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res.iterations == 50
+    assert jobs <= 1.1 * res.iterations, (jobs, res.iterations)

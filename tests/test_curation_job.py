@@ -104,6 +104,36 @@ def test_resume_equals_uninterrupted(spark, tmp_path, pages_path):
         assert gr == pytest.approx(wr, abs=1e-12)
 
 
+def test_resume_at_max_iter_reports_finite_delta(spark, tmp_path, pages_path):
+    """A job killed after the PageRank loop's last snapshot (iteration ==
+    max_iter) but before the stage completed resumes with no transition
+    left to run: the report says so with delta -1.0 — never Infinity,
+    which is not valid JSON."""
+    import json
+
+    from amanogawa_spark.checkpoint import CheckpointManager
+    from amanogawa_spark.graph.build import build_edges, build_vertices
+    from amanogawa_spark.graph.pagerank import pagerank
+
+    work = str(tmp_path / "work_i")
+    args = _args(pages_path, work, str(tmp_path / "out_i"), max_iter=3)
+    pages = spark.read.parquet(pages_path)
+    v = build_vertices(pages, id_mode="hash")
+    e = build_edges(pages, v)
+    ckpt = CheckpointManager(
+        spark, pagerank_checkpoint_root(work, pagerank_params(args))
+    )
+    pagerank(v.select("id"), e, tol=1e-6, max_iter=3, checkpoint=ckpt,
+             checkpoint_every=1)
+    assert ckpt.latest_iteration() == 3
+
+    rep = run(args, spark=spark)
+    assert rep["pagerank_resumed_from"] == 3
+    assert rep["pagerank_iterations"] == 3
+    assert rep["pagerank_delta"] == -1.0
+    json.dumps(rep, allow_nan=False)
+
+
 def test_second_invocation_skips_all_stages(spark, tmp_path, pages_path):
     work = str(tmp_path / "work_c")
     out = str(tmp_path / "out_c")

@@ -78,20 +78,25 @@ def test_pagerank_warm_start_converges_faster_same_fixpoint(spark, graph):
 
 
 def test_pagerank_restores_aqe_conf(spark):
-    """The loop disables AQE and pins the shuffle partition count for
-    itself only — the session conf must come back."""
+    """The loop disables AQE, pins the shuffle partition count and relaxes
+    the co-partitioning key rule for itself only — the session conf must
+    come back."""
     key = "spark.sql.adaptive.enabled"
     parts = "spark.sql.shuffle.partitions"
+    copart = "spark.sql.requireAllClusterKeysForCoPartition"
     prev = spark.conf.get(key)
     prev_parts = spark.conf.get(parts)
+    prev_copart = spark.conf.get(copart)
     spark.conf.set(key, "true")
     e = spark.createDataFrame([(0, 1), (1, 0)], "src_id long, dst_id long")
     v = spark.createDataFrame([(0,), (1,)], "id long")
     pagerank(v, e, tol=-1.0, max_iter=2)
     assert spark.conf.get(key) == "true"
     assert spark.conf.get(parts) == prev_parts
+    assert spark.conf.get(copart) == prev_copart
     pagerank(v, e, tol=-1.0, max_iter=2, num_partitions=3)
     assert spark.conf.get(parts) == prev_parts
+    assert spark.conf.get(copart) == prev_copart
     spark.conf.set(key, prev)
 
 
@@ -126,37 +131,56 @@ def _exchanges_below_join(plan: str, is_scan) -> tuple[int, list[str]]:
 def test_pagerank_iteration_reuses_cached_edge_layout(spark, graph, monkeypatch):
     """The per-iteration edges ⋈ ranks join must read the cached edge
     layout in place: no Exchange between the edge table's
-    InMemoryTableScan and the join. The session runs with AQE on and more
+    InMemoryTableScan and the join — on the classic layout (hashed on
+    ``src_id``) and on the pid-clustered one of ``blocked_pagerank``
+    (hashed on ``(spid, salt)``). The session runs with AQE on and more
     shuffle partitions than the loop uses — the conditions under which a
     layout persisted outside the loop conf gets re-shuffled every
     iteration. Plans are captured at every localCheckpoint the run makes
     (the loop's per-iteration lineage cut)."""
+    from pyspark.sql import functions as F
+
+    from amanogawa_spark.graph.blocked import blocked_pagerank
+
     v, e, n, id_edges = graph
-    plans = []
+    labels = v.select("id", (F.col("id") % 4).alias("pid"))
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 2  # loop: 2
+    runs = [
+        (
+            lambda: pagerank(v, e, tol=-1.0, max_iter=4),
+            ("src_id", "dst_id", "out_degree"),
+        ),
+        (
+            lambda: blocked_pagerank(v, e, labels, max_iter=4, n_salt=2),
+            ("spid", "salt", "src_id", "dst_id", "out_degree"),
+        ),
+    ]
     cls = type(v)
     real = cls.localCheckpoint
+    for run, cols in runs:
+        plans = []
 
-    def recording(self, *args, **kwargs):
-        plans.append(self._jdf.queryExecution().executedPlan().toString())
-        return real(self, *args, **kwargs)
+        def recording(self, *args, **kwargs):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(cls, "localCheckpoint", recording)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    pagerank(v, e, tol=-1.0, max_iter=4)
-    monkeypatch.undo()
+        monkeypatch.setattr(cls, "localCheckpoint", recording)
+        run()
+        monkeypatch.undo()
 
-    def edge_scan(line: str) -> bool:
-        node = line.lstrip(" :+-|*()0123456789")
-        return node.startswith("InMemoryTableScan") and all(
-            c in node for c in ("src_id", "dst_id", "out_degree")
-        )
+        def edge_scan(line: str) -> bool:
+            node = line.lstrip(" :+-|*()0123456789")
+            return node.startswith("InMemoryTableScan") and all(
+                c in node for c in cols
+            )
 
-    scans = 0
-    for plan in plans:
-        found, bad = _exchanges_below_join(plan, edge_scan)
-        scans += found
-        assert not bad, f"edge layout re-shuffled inside the iteration:\n{plan}"
-    assert scans > 0, "no iteration plan read the cached edge layout"
+        scans = 0
+        for plan in plans:
+            found, bad = _exchanges_below_join(plan, edge_scan)
+            scans += found
+            assert not bad, f"edge layout re-shuffled inside the iteration:\n{plan}"
+        assert scans > 0, f"no iteration plan read the cached {cols} layout"
 
 
 def test_pagerank_weighted_allclose(spark):

@@ -117,21 +117,17 @@ def main() -> None:
     edges = spark.read.parquet(os.path.join(work, "graph_edges"))
     pmap = spark.read.parquet(os.path.join(work, "partition_map"))
     layout = spark.read.parquet(os.path.join(work, "edges_blocked"))
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prebuilt = layout.repartition(n_part, "spid", "salt").persist()
-    prebuilt.count()
     out["n_edges"] = edges.count()
 
     marks = {}
     sid = _max_sid()
     t0 = time.time()
     res_pid = blocked_pagerank(
-        vertices.select("id"), edges, pmap, max_iter=8, prebuilt_edges=prebuilt
+        vertices.select("id"), edges, pmap, max_iter=8, prebuilt_edges=layout
     )
     res_pid.ranks.count()
     marks["pid8_seconds"] = round(time.time() - t0, 1)
     marks["pid8_shuffle_bytes"] = _shuf_since(sid)
-    prebuilt.unpersist()
 
     sid = _max_sid()
     t0 = time.time()

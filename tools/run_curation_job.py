@@ -190,11 +190,8 @@ def run(args, spark=None) -> dict:
         ckpt = CheckpointManager(spark, pagerank_checkpoint_root(args.work, pr_params))
         report["pagerank_resumed_from"] = ckpt.latest_iteration() or 0
         if layout == "pid":
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            prebuilt = (
-                blocked_layout.repartition(n_part, "spid", "salt").persist()
-            )
-            prebuilt.count()
+            # the durable layout is re-hashed and cached under the loop
+            # conf by blocked_pagerank itself
             res = blocked_pagerank(
                 vertices.select("id"),
                 edges,
@@ -203,9 +200,8 @@ def run(args, spark=None) -> dict:
                 max_iter=args.max_iter,
                 checkpoint=ckpt,
                 checkpoint_every=args.checkpoint_every,
-                prebuilt_edges=prebuilt,
+                prebuilt_edges=blocked_layout,
             )
-            prebuilt.unpersist()
         else:
             res = pagerank(
                 vertices.select("id"),
