@@ -5,13 +5,11 @@ and metrics ... so any iteration is resumable". The reference has no
 equivalent (its executor fully materializes in memory,
 ``core/executor.h:24-72``); this is new scale machinery.
 
-Backend: Iceberg tables when the runtime has the Iceberg catalog jars
-(real clusters); parquet directories otherwise (this sandbox ships no
-Iceberg jar — the interface is identical, only ``_write``/``_read`` swap).
+Backend: parquet directories.
 
 Layout under ``root/``:
     state/iter=K/            snapshot of the iteration state DataFrame
-    metrics.jsonl            one JSON row per iteration (driver-side append)
+    metrics.jsonl            one JSON row per round run (driver-side append)
 """
 
 from __future__ import annotations
@@ -25,16 +23,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
 class CheckpointManager:
-    """Parquet/Iceberg-backed iteration checkpoints + a metrics journal."""
+    """Parquet-backed iteration checkpoints + a metrics journal."""
 
     def __init__(self, spark: SparkSession, root: str, keep_last: int = 2):
         self.spark = spark
@@ -151,7 +141,13 @@ class CheckpointManager:
             f.write(json.dumps(row) + "\n")
 
     def read_metrics(self) -> list[dict[str, Any]]:
+        """One row per iteration, in iteration order. The journal stays
+        append-only, so a run killed between snapshots keeps its rows for
+        audit; the resumed run re-runs (and re-journals) the rounds after
+        the snapshot, and the row written last wins."""
         if not os.path.exists(self.metrics_path):
             return []
         with open(self.metrics_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+            rows = [json.loads(line) for line in f if line.strip()]
+        last = {row["iteration"]: row for row in rows}
+        return [last[it] for it in sorted(last)]

@@ -11,17 +11,21 @@ Two implementations (SURVEY.md §7 step 5):
    (label = min over self ∪ neighbors). O(diameter) rounds; simple,
    oracle-friendly; used for cross-checking and fixed-iteration oracles.
 
-Both return ``(id long, component long)`` where ``component`` is the
-minimum vertex id of the component (deterministic canonical label).
+Both run on the shared superstep loop (``graph/superstep.py``): one
+eager ``localCheckpoint`` job per round whose convergence metrics are
+observed in the same pass, so no round needs a separate count or join
+to decide whether to stop. Both return ``(id long, component long)``
+where ``component`` is the minimum vertex id of the component
+(deterministic canonical label).
 """
 
 from __future__ import annotations
 
-import time as _time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from amanogawa_spark.graph.superstep import supersteps
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -56,15 +60,17 @@ def connected_components(
     parent. Large-star: connect all strictly-larger neighbors of u to
     min(N(u) ∪ {u}). Small-star: connect all smaller-or-equal neighbors
     to the minimum. Fixed point: every u points at its component minimum.
+    Each round is one superstep (``graph/superstep.py``) observing the
+    set's size and signature (``count``, ``bit_xor`` of row hashes; 2^-64
+    false-stop risk); the loop stops when the signature repeats.
 
     ``checkpoint``: optional
-    :class:`~amanogawa_spark.checkpoint.CheckpointManager` — each round's
-    parent-pointer set is snapshotted durably (with per-partition manifest
-    + metrics journal) and a killed job resumes from the latest round,
-    the same superjob contract as pagerank (north rule: every iteration
-    resumable). The durable re-read doubles as the lineage truncation.
+    :class:`~amanogawa_spark.checkpoint.CheckpointManager` — the
+    parent-pointer set is snapshotted durably every ``checkpoint_every``
+    rounds (with per-partition manifest + metrics journal) and a killed
+    job resumes from the latest snapshot, the same superjob contract as
+    pagerank (north rule: every iteration resumable).
     """
-    spark = vertices.sparkSession
     base = _symmetrize(edges)
     if initial is not None:
         warm = (
@@ -74,7 +80,6 @@ def connected_components(
         base = base.union(warm).union(
             warm.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).distinct()
-    pairs = base.persist(StorageLevel.MEMORY_AND_DISK)
 
     def large_star(e: DataFrame) -> DataFrame:
         nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
@@ -105,64 +110,23 @@ def connected_components(
         )
         return linked
 
-    def _sig(df: DataFrame):
-        """(count, xor-of-row-hashes) set signature — one cheap action per
-        round instead of two exceptAll scans; 2^-64 false-stop risk."""
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),  # xor: no ANSI overflow
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    e = pairs
-    start_round = 0
-    if checkpoint is not None:
-        last = checkpoint.latest_iteration()
-        if last is not None:
-            e = checkpoint.load(last)
-            start_round = last
-    prev_sig = _sig(e)
-    prev_cached = None  # the persisted handle (NOT the checkpoint wrapper —
-    # unpersisting the wrapper is a no-op on the cache-manager entry)
-    for rnd in range(start_round + 1, max_rounds + 1):
-        t0 = _time.time()
-        cached = small_star(large_star(e)).persist(StorageLevel.MEMORY_AND_DISK)
-        # each round references the previous edge set ~16x (nbrs/oriented
-        # reuse), so the LOGICAL plan grows 16^rounds and Catalyst
-        # re-analysis goes exponential — truncate every round by default
-        if checkpoint is not None and rnd % checkpoint_every == 0:
-            new_e = checkpoint.save(cached, rnd)  # durable + fresh lineage
-        elif rnd % checkpoint_every == 0:
-            new_e = cached.localCheckpoint(eager=True)
-        else:
-            new_e = cached
-        sig = _sig(new_e)
-        if checkpoint is not None:
-            checkpoint.log_metrics(
-                rnd, n_pairs=sig[0], sig=sig[1], seconds=_time.time() - t0
-            )
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = cached
-        e = new_e
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    comp = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    # materialize the O(V) result so every per-round cache (including the
-    # final round's, which `e` may still BE when the signature-converged
-    # break fires between checkpoints) can be released before returning —
-    # same teardown shape as pagerank
-    result = (
+    run = supersteps(
+        base,
+        lambda e, _: small_star(large_star(e)),
+        # xor: no ANSI overflow
+        {"n_pairs": F.count("*"), "sig": F.bit_xor(F.xxhash64("u", "v"))},
+        max_rounds,
+        lambda m, prev: m == prev,
+        checkpoint,
+        checkpoint_every,
+    )
+    comp = run.state.select(F.col("u").alias("id"), F.col("v").alias("component"))
+    return (
         vertices.select("id")
         .join(comp, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
         .localCheckpoint(eager=True)
     )
-    if prev_cached is not None:
-        prev_cached.unpersist()
-    pairs.unpersist()
-    return result
 
 
 def connected_components_minlabel(
@@ -170,58 +134,34 @@ def connected_components_minlabel(
     edges: DataFrame,
     max_rounds: int = 200,
     fixed_rounds: int | None = None,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
-    """Synchronous min-label propagation. ``fixed_rounds`` runs exactly that
-    many rounds without a convergence test (the SQL-oracle variant)."""
+    """Synchronous min-label propagation until no label changes (observed
+    as ``sum(component != old_component)`` in each round's superstep).
+    ``fixed_rounds`` runs exactly that many rounds without a convergence
+    test (the SQL-oracle variant)."""
     pairs = _symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = vertices.select("id", F.col("id").alias("component")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    # persisted handles pending release — freed at each eager checkpoint
-    # (whose blocks supersede them); unpersisting the checkpoint WRAPPER
-    # (the old code) is a no-op on the cache-manager entry and leaked one
-    # cached label set per checkpointed round
-    pending = [labels]
-    for rnd in range(1, rounds + 1):
+
+    def step(labels: DataFrame, _) -> DataFrame:
         nbr_min = (
             pairs.join(labels.withColumnRenamed("id", "v"), "v")
             .groupBy(F.col("u").alias("id"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        cached = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        return labels.join(nbr_min, "id", "left").select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce("nbr_component", F.col("component"))
+            ).alias("component"),
+            F.col("component").alias("old_component"),
         )
-        prev_labels = labels
-        if rnd % checkpoint_every == 0:
-            labels = cached.localCheckpoint(eager=True)
-            for p in pending + [cached]:
-                p.unpersist()
-            pending = []
-        else:
-            pending.append(cached)
-            labels = cached
-        if fixed_rounds is None:
-            changed = (
-                labels.join(
-                    prev_labels.withColumnRenamed("component", "old_component"), "id"
-                )
-                .filter(F.col("component") != F.col("old_component"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                break
-    for p in pending:
-        if p is not labels:
-            p.unpersist()
+
+    run = supersteps(
+        vertices.select("id", F.col("id").alias("component")),
+        step,
+        {"changed": F.sum((F.col("component") != F.col("old_component")).cast("long"))},
+        fixed_rounds if fixed_rounds is not None else max_rounds,
+        None if fixed_rounds is not None else lambda m, _: m["changed"] == 0,
+        start_metrics={},
+    )
     pairs.unpersist()
-    return labels
+    return run.state.select("id", "component")

@@ -3,9 +3,11 @@
 The k-core is the maximal subgraph in which every vertex has (undirected)
 degree >= k — the standard dense-substructure primitive for link graphs
 (spam-farm detection, community seeding). Peeling repeatedly removes
-vertices with degree < k; each round is one join + one hash aggregate, so
-the shape is identical to the engine's other iterative programs: persisted
-symmetrized edges, per-round lineage truncation, count-based convergence.
+vertices with degree < k; each round is one join + one hash aggregate.
+``k_core`` runs on the engine's shared superstep loop
+(``graph/superstep.py``): persisted symmetrized edges, one
+``localCheckpoint`` job per round with the alive count observed in the
+same pass, and a stop once the count repeats.
 
 Rounds needed = longest removal cascade; on web graphs this is small
 (degeneracy ordering removes most vertices in the first rounds).
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from amanogawa_spark.graph.components import _symmetrize
+from amanogawa_spark.graph.superstep import supersteps
 
 
 def k_core(
@@ -31,39 +34,24 @@ def k_core(
     that many peeling rounds without a convergence check (the SQL-oracle
     variant); otherwise peel until no vertex is removed."""
     pairs = _symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    alive = vertices.select("id").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    n_alive = alive.count()
-    rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-    pending = [alive]
-    for rnd in range(1, rounds + 1):
-        deg = (
+
+    def peel(alive: DataFrame, _) -> DataFrame:
+        return (
             pairs.join(alive.withColumnRenamed("id", "u"), "u")
             .join(alive.withColumnRenamed("id", "v"), "v")
             .groupBy(F.col("u").alias("id"))
             .agg(F.count("*").alias("deg"))
+            .filter(F.col("deg") >= k)
+            .select("id")
         )
-        cached = (
-            deg.filter(F.col("deg") >= k).select("id").persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if rnd % 3 == 0:
-            new_alive = cached.localCheckpoint(eager=True)
-            for p in pending + [cached]:
-                p.unpersist()
-            pending = []
-        else:
-            pending.append(cached)
-            new_alive = cached
-        if fixed_rounds is None:
-            n_new = new_alive.count()
-            alive = new_alive
-            if n_new == n_alive:
-                break
-            n_alive = n_new
-        else:
-            alive = new_alive
-    for p in pending:
-        if p is not alive:
-            p.unpersist()
+
+    alive = supersteps(
+        vertices.select("id").distinct(),
+        peel,
+        {"alive": F.count("*")},
+        fixed_rounds if fixed_rounds is not None else max_rounds,
+        None if fixed_rounds is not None else lambda m, prev: m == prev,
+    ).state
     pairs.unpersist()
     return alive
 

@@ -9,6 +9,9 @@ synchronous: round k+1 reads only round-k labels.
 Spark shape per round: one join (neighbor labels), one
 ``groupBy(id, label).count()``, one top-1-per-id via ``max_by``-style
 struct ordering (no window shuffle beyond the agg), one left join back.
+The rounds run on the shared superstep loop (``graph/superstep.py``):
+each is one eager ``localCheckpoint`` job, snapshotted durably every
+``checkpoint_every`` rounds, and nothing stays cached after the call.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from amanogawa_spark.graph.components import _symmetrize
+from amanogawa_spark.graph.superstep import supersteps
 
 
 def label_propagation(
@@ -44,8 +48,6 @@ def label_propagation(
     the latest snapshotted round — the same superjob contract as pagerank
     and connected_components.
     """
-    import time as _time
-
     if weight_col is not None:
         # drop self-loops before symmetrizing, matching _symmetrize's u != v
         # filter on the unweighted path — otherwise a self-loop votes weight
@@ -71,24 +73,8 @@ def label_propagation(
         )
     else:
         pairs = _symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = vertices.select("id", F.col("id").alias("label")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    start_round = 0
-    if checkpoint is not None:
-        last = checkpoint.latest_iteration()
-        if last is not None:
-            labels.unpersist()
-            labels = checkpoint.load(last).persist(StorageLevel.MEMORY_AND_DISK)
-            start_round = last
-    # cache discipline: persisted handles accumulate in `pending` and are
-    # released at each eager checkpoint (whose blocks supersede them). The
-    # old `old.unpersist()` targeted the checkpoint WRAPPER on checkpoint
-    # rounds — a no-op on the cache-manager entry — leaking one cached label
-    # set per checkpointed round for the session lifetime.
-    pending = [labels]
-    for rnd in range(start_round + 1, max_rounds + 1):
-        t0 = _time.time()
+
+    def vote(labels: DataFrame, _) -> DataFrame:
         counts = (
             pairs.join(labels.withColumnRenamed("id", "v"), "v")
             .groupBy(F.col("u").alias("id"), "label")
@@ -102,27 +88,18 @@ def label_propagation(
         best = counts.groupBy("id").agg(
             F.max(F.struct(F.col("freq"), (-F.col("label")).alias("neg"))).alias("m")
         ).select("id", (-F.col("m.neg")).cast("long").alias("new_label"))
-        cached = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("new_label", F.col("label")).alias("label"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        return labels.join(best, "id", "left").select(
+            "id", F.coalesce("new_label", F.col("label")).alias("label")
         )
-        if rnd % checkpoint_every == 0:
-            if checkpoint is not None:
-                labels = checkpoint.save(cached, rnd)  # durable + fresh lineage
-            else:
-                labels = cached.localCheckpoint(eager=True)
-            for p in pending + [cached]:
-                p.unpersist()
-            pending = []
-        else:
-            pending.append(cached)
-            labels = cached
-        if checkpoint is not None:
-            checkpoint.log_metrics(rnd, seconds=_time.time() - t0)
-    # keep the final frame (the caller's result) cached; release the rest
-    for p in pending:
-        if p is not labels:
-            p.unpersist()
+
+    labels = supersteps(
+        vertices.select("id", F.col("id").alias("label")),
+        vote,
+        {},
+        max_rounds,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        start_metrics={},
+    ).state
     pairs.unpersist()
     return labels

@@ -17,23 +17,21 @@ Scale design (SURVEY.md §4.2) — one loop, two layouts:
   degree-annotated edge table on ``src_id`` and joins the state to it
   narrowly on ``src_id``; the pid-clustered layout (``graph/blocked.py``)
   hashes it on ``(spid, salt)`` and re-hashes the state to match.
-- :func:`power_iterate` is the ONE iteration loop (``pagerank``,
-  ``personalized_pagerank``, ``blocked_pagerank``). It carries one state
-  frame ``(id, dang, [extra...], rank)`` hashed on ``id``. Per iteration
-  the only shuffle on the classic layout is the ``groupBy(dst_id)``
-  partial+final hash aggregate of the contributions — O(V) rows;
-  ``edges ⋈ state`` and ``state ⋈ contributions`` are both narrow.
-- every iteration is one small plan of fixed size and ONE job: the next
-  state (with ``old_rank`` carried along) is materialized and truncated by
-  an eager ``localCheckpoint``, and the L1 delta and the NEXT iteration's
-  dangling mass (``sum(rank * dang)``) are observed aggregates of that same
-  pass (``DataFrame.observe``) — no separate aggregate stage or plan.
-  (Measured against a lazy checkpoint plus an ``agg().collect()`` over
-  it: same results, ~18% lower per-iteration time, one stage fewer.) No
-  per-iteration persist/unpersist.
-- a :class:`CheckpointManager` snapshot of the materialized state every
-  ``checkpoint_every`` iterations makes the run resumable; per-iteration
-  metrics (delta, dangling mass, wall time) go to the metrics journal.
+- :func:`power_iterate` is PageRank's step over any layout (``pagerank``,
+  ``personalized_pagerank``, ``blocked_pagerank``); the shared superstep
+  loop (``graph/superstep.py``) runs it, with its snapshots every
+  ``checkpoint_every`` iterations, resume and metrics journal. It carries
+  one state frame ``(id, dang, [extra...], rank)`` hashed on ``id``. Per
+  iteration the only shuffle on the classic layout is the
+  ``groupBy(dst_id)`` partial+final hash aggregate of the contributions —
+  O(V) rows; ``edges ⋈ state`` and ``state ⋈ contributions`` are both
+  narrow.
+- every iteration is one small plan of fixed size and ONE job (the loop's
+  eager observed ``localCheckpoint``): the L1 delta and the NEXT
+  iteration's dangling mass (``sum(rank * dang)``) are observed aggregates
+  of the pass that materializes the next state. (Measured against a lazy
+  checkpoint plus an ``agg().collect()`` over it: same results, ~18%
+  lower per-iteration time, one stage fewer.)
 - hub-vertex skew in ``groupBy(dst_id)`` is collapsed map-side by the
   partial aggregate; ``adaptive=True`` opts back into AQE skew handling,
   and ``graph/skew.py`` has the two-level salted aggregate.
@@ -41,17 +39,17 @@ Scale design (SURVEY.md §4.2) — one loop, two layouts:
 
 from __future__ import annotations
 
-import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from amanogawa_spark.checkpoint import CheckpointManager
 from amanogawa_spark.graph.iter_conf import iteration_conf
+from amanogawa_spark.graph.superstep import checkpoint_observing, supersteps
 
 # size-aware partitioning: a loop re-touches the SAME cached partitioning
 # every iteration, and a 43k-edge graph spread over 32 partitions pays 32
@@ -187,20 +185,6 @@ def _contributions(
     )
 
 
-def _checkpoint_observing(
-    df: DataFrame, *metrics: Column
-) -> tuple[DataFrame, list[float]]:
-    """Materialize ``df`` as a local checkpoint in ONE job and return it
-    with the values of the aggregate ``metrics`` over its rows, computed
-    in that same pass (0.0 for an empty frame)."""
-    obs = Observation()
-    names = [f"m{i}" for i in range(len(metrics))]
-    df = df.observe(obs, *(m.alias(k) for m, k in zip(metrics, names)))
-    out = df.localCheckpoint(eager=True)
-    got = obs.get
-    return out, [got[k] or 0.0 for k in names]
-
-
 def _dangling_mass() -> Column:
     return F.sum(F.col("rank") * F.col("dang"))
 
@@ -216,93 +200,77 @@ def power_iterate(
     checkpoint_every: int = 5,
     initial_ranks: DataFrame | None = None,
 ) -> PageRankResult:
-    """The PageRank iteration loop shared by every variant and layout.
+    """PageRank power iteration over any layout, run by
+    :func:`~amanogawa_spark.graph.superstep.supersteps`.
 
     ``state`` is the cold-start state ``(id, dang, [extra...], rank)``
     hashed on ``id`` and ``dangling_mass`` its ``sum(rank * dang)``; the
     extra columns (layout keys, a restart share) ride along unchanged.
     ``rank_update(in_mass, dangling_mass)`` is the new rank Column: the
-    restart term plus the damped in-mass. Each iteration is ONE job: an
-    eager ``localCheckpoint`` of the next state whose L1 delta and next
-    dangling mass are observed in the same pass.
+    restart term plus the damped in-mass. Each iteration is ONE job whose
+    L1 delta and next dangling mass are observed in the same pass; the
+    loop stops once the delta is at most ``tol``.
 
     ``checkpoint`` resumes from its latest snapshot (vertices it misses
-    keep their cold-start rank) and writes one every ``checkpoint_every``
-    iterations; per-iteration metrics go to its journal. ``initial_ranks``
-    (id, rank) warm-starts a cold run. ``delta`` is the L1 delta of the
-    last transition, or -1.0 when none ran (e.g. a run resumed at
-    ``max_iter``).
+    keep their start rank) and writes one every ``checkpoint_every``
+    iterations. ``initial_ranks`` (id, rank) warm-starts the run.
+    ``delta`` is the L1 delta of the last transition, or -1.0 when none
+    ran (e.g. a run resumed at ``max_iter``).
     """
     keep = [c for c in state.columns if c != "rank"]
-    start_iter = 0
-    start = None
-    if checkpoint is not None:
-        last = checkpoint.latest_iteration()
-        if last is not None:
-            start = checkpoint.load(last)
-            start_iter = last
-    warm = start is None and initial_ranks is not None
-    if warm:
+
+    def onto(base: DataFrame, start: DataFrame) -> DataFrame:
+        return base.join(
+            start.select("id", F.col("rank").alias("_r0")), "id", "left"
+        ).select(*keep, F.coalesce("_r0", "rank").alias("rank"))
+
+    if initial_ranks is not None:
         # warm start (incremental recrawl): yesterday's scores projected
         # onto today's vertex set — new pages get their cold-start share,
         # dropped pages vanish — renormalized below to unit mass so the
         # dangling redistribution algebra stays exact. The fixpoint is
         # unchanged (power iteration has a unique attractor); a nearby
         # start only takes fewer iterations to reach it.
-        start = initial_ranks
-    if start is not None:
-        state, (mass, dangling_mass) = _checkpoint_observing(
-            state.join(start.select("id", F.col("rank").alias("_r0")), "id", "left")
-            .select(*keep, F.coalesce("_r0", "rank").alias("rank")),
-            F.sum("rank"),
-            _dangling_mass(),
+        state, m = checkpoint_observing(
+            onto(state, initial_ranks),
+            {"mass": F.sum("rank"), "dangling_mass": _dangling_mass()},
         )
-        if warm:
-            mass = mass or 1.0
-            state = state.select(*keep, (F.col("rank") / F.lit(mass)).alias("rank"))
-            dangling_mass /= mass
+        mass = m["mass"] or 1.0
+        state = state.select(*keep, (F.col("rank") / F.lit(mass)).alias("rank"))
+        dangling_mass = m["dangling_mass"] / mass
 
-    history: list[dict] = []
-    delta = float("inf")
-    it = start_iter
-    while it < max_iter and delta > tol:
-        t0 = time.time()
-        it += 1
-        nxt = state.join(
+    def step(state: DataFrame, prev: dict) -> DataFrame:
+        return state.join(
             lay.contributions(state).hint("shuffle_hash"), "id", "left"
         ).select(
             *keep,
-            rank_update(F.coalesce("in_mass", F.lit(0.0)), dangling_mass).alias(
-                "rank"
-            ),
+            rank_update(
+                F.coalesce("in_mass", F.lit(0.0)), prev["dangling_mass"]
+            ).alias("rank"),
             F.col("rank").alias("old_rank"),
         )
-        state, (delta, dangling_mass) = _checkpoint_observing(
-            nxt, F.sum(F.abs(F.col("rank") - F.col("old_rank"))), _dangling_mass()
-        )
-        if checkpoint is not None and it % checkpoint_every == 0:
-            # written from the materialized state; the loop goes on
-            # from the local checkpoint, which keeps its partitioning
-            checkpoint.save(state.select("id", "rank"), it)
-        row = {
-            "iteration": it,
-            "l1_delta": float(delta),
-            "dangling_mass": float(dangling_mass),
-            "seconds": time.time() - t0,
-        }
-        history.append(row)
-        if checkpoint is not None:
-            checkpoint.log_metrics(
-                it,
-                l1_delta=row["l1_delta"],
-                dangling_mass=row["dangling_mass"],
-                seconds=row["seconds"],
-            )
+
+    run = supersteps(
+        state,
+        step,
+        {
+            "l1_delta": F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
+            "dangling_mass": _dangling_mass(),
+        },
+        max_iter,
+        lambda m, _: m["l1_delta"] <= tol,
+        checkpoint,
+        checkpoint_every,
+        start_metrics={"dangling_mass": dangling_mass},
+        # old_rank = rank, so the metrics observe on a resumed frame too
+        resume=lambda cold, snap: onto(cold, snap).withColumn("old_rank", F.col("rank")),
+        snapshot_cols=["id", "rank"],
+    )
     return PageRankResult(
-        ranks=state.select("id", "rank"),
-        iterations=it,
-        delta=float(delta) if history else -1.0,
-        history=history,
+        ranks=run.state.select("id", "rank"),
+        iterations=run.rounds,
+        delta=run.history[-1]["l1_delta"] if run.history else -1.0,
+        history=run.history,
     )
 
 
@@ -397,15 +365,15 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank requires a non-empty seed set")
     with loop_layout(vertices, edges, num_partitions, adaptive) as lay:
         sv = F.when(F.col("_is_seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-        state, (dangling_mass,) = _checkpoint_observing(
+        state, m = checkpoint_observing(
             lay.verts.join(seed_ids.withColumn("_is_seed", F.lit(True)), "id", "left")
             .select("id", "dang", sv.alias("sv"), sv.alias("rank")),
-            _dangling_mass(),
+            {"dangling_mass": _dangling_mass()},
         )
         return power_iterate(
             lay,
             state,
-            dangling_mass,
+            m["dangling_mass"],
             lambda in_mass, dm: F.col("sv")
             * (F.lit(1.0 - damping) + F.lit(damping * dm))
             + F.lit(damping) * in_mass,
@@ -433,20 +401,22 @@ def katz_centrality(
     contributions shuffle, state truncated by a localCheckpoint whose
     materialization is the round's one job."""
     with loop_layout(vertices, edges, num_partitions) as lay:
-        scores = lay.verts.select("id", F.lit(beta).alias("katz"))
-        for _ in range(iterations):
-            contribs = _contributions(lay.edges, scores, "katz")
-            scores = (
-                scores.join(contribs.hint("shuffle_hash"), "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(alpha) * F.coalesce("in_mass", F.lit(0.0)) + F.lit(beta)
-                    ).alias("katz"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    return scores
+        return supersteps(
+            lay.verts.select("id", F.lit(beta).alias("katz")),
+            lambda scores, _: scores.join(
+                _contributions(lay.edges, scores, "katz").hint("shuffle_hash"),
+                "id",
+                "left",
+            ).select(
+                "id",
+                (F.lit(alpha) * F.coalesce("in_mass", F.lit(0.0)) + F.lit(beta)).alias(
+                    "katz"
+                ),
+            ),
+            {},
+            iterations,
+            start_metrics={},
+        ).state
 
 
 def pagerank_fixed_iterations(

@@ -260,3 +260,30 @@ def test_triangle_count_scale_gate_routing(spark):
     assert normal.total == 1
     with pytest.raises(ValueError, match="on_large"):
         triangle_count(tri, on_large="bogus")
+
+
+def test_iterative_results_leave_no_cached_relations(spark):
+    """Every round is a local checkpoint and the symmetrized pairs are
+    released before returning, so none of the iterative programs leaves a
+    cached relation behind in the session's cache manager — including
+    LPA stopping between checkpoint rounds and loops that converge early."""
+    from amanogawa_spark.graph.kcore import k_core
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (6, 7), (7, 8), (8, 6)],
+        "src_id long, dst_id long",
+    )
+    verts = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    leaked = []
+    for name, run in (
+        ("connected_components", lambda: connected_components(verts, edges)),
+        ("minlabel", lambda: connected_components_minlabel(verts, edges)),
+        ("label_propagation", lambda: label_propagation(verts, edges, max_rounds=3)),
+        ("k_core", lambda: k_core(verts, edges, k=2)),
+    ):
+        before = cache.numCachedEntries()
+        assert run().count() > 0, name
+        if cache.numCachedEntries() != before:
+            leaked.append(name)
+    assert leaked == []

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pytest
 
@@ -63,6 +65,26 @@ def test_pagerank_resume_from_checkpoint(spark, graph, tmp_path):
     metrics = ckpt.read_metrics()
     assert [m["iteration"] for m in metrics] == [1, 2, 3, 4, 5, 6, 7, 8, 9, 10]
     assert all("l1_delta" in m and "dangling_mass" in m for m in metrics)
+
+
+def test_pagerank_journal_after_mid_interval_resume(spark, graph, tmp_path):
+    """A run killed between snapshots (5 iterations, snapshot at 4) and
+    resumed to 10 re-runs iteration 5: the journal file keeps both rows
+    (append-only, so the killed attempt stays auditable) and read_metrics
+    returns exactly one row per iteration, the one written last."""
+    v, e, n, id_edges = graph
+    ckpt = CheckpointManager(spark, str(tmp_path / "pr"))
+    pagerank(v, e, tol=-1.0, max_iter=5, checkpoint_every=2, checkpoint=ckpt)
+    assert ckpt.latest_iteration() == 4
+    resumed = pagerank(v, e, tol=-1.0, max_iter=10, checkpoint_every=2, checkpoint=ckpt)
+    assert resumed.iterations == 10
+    assert [h["iteration"] for h in resumed.history] == [5, 6, 7, 8, 9, 10]
+    metrics = ckpt.read_metrics()
+    assert [m["iteration"] for m in metrics] == list(range(1, 11))
+    assert metrics[4]["l1_delta"] == resumed.history[0]["l1_delta"]
+    with open(ckpt.metrics_path) as f:
+        written = [json.loads(line)["iteration"] for line in f]
+    assert written.count(5) == 2
 
 
 def test_pagerank_warm_start_converges_faster_same_fixpoint(spark, graph):

@@ -138,6 +138,31 @@ def test_lpa_resumable(spark, tmp_path):
     assert resumed == plain
 
 
+def test_lpa_journal_after_mid_interval_resume(spark, tmp_path):
+    """LPA killed between snapshots (3 rounds, snapshot at 2) and resumed
+    to 5 re-runs round 3: read_metrics holds exactly rounds 1..5, and the
+    labels equal an uninterrupted 5-round run."""
+    from amanogawa_spark.graph.lpa import label_propagation
+
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 12) for i in range(12)] + [(20 + i, 20 + (i + 1) % 6) for i in range(6)],
+        "src_id long, dst_id long",
+    )
+    verts = spark.createDataFrame([(i,) for i in range(26)], "id long")
+    plain = {r.id: r.label for r in label_propagation(verts, edges, max_rounds=5).collect()}
+    cm = CheckpointManager(spark, str(tmp_path / "lpa_ck"))
+    label_propagation(verts, edges, max_rounds=3, checkpoint_every=2, checkpoint=cm)
+    assert cm.latest_iteration() == 2
+    resumed = {
+        r.id: r.label
+        for r in label_propagation(
+            verts, edges, max_rounds=5, checkpoint_every=2, checkpoint=cm
+        ).collect()
+    }
+    assert resumed == plain
+    assert [m["iteration"] for m in cm.read_metrics()] == [1, 2, 3, 4, 5]
+
+
 def test_auto_salt_factor_zipf(spark, zipf_edges):
     """'auto' reads the degree histogram: hub freq ~1250 with
     target_per_reducer=100 -> ceil(1250/100) = 13; a uniform key column
