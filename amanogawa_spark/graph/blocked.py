@@ -162,7 +162,7 @@ def blocked_pagerank(
                 .agg(F.sum(F.col("rank") / F.col("out_degree")).alias("in_mass"))
             )
 
-        return e, verts, contributions
+        return (e,), verts, contributions
 
     with scoped_layout(edges, num_partitions, False, build) as lay:
         return layout_pagerank(

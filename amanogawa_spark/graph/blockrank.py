@@ -249,7 +249,7 @@ def blockrank(
     — the local phase touches only intra-block edges and the quotient
     phase only O(|blocks|²)-bounded rollup rows.
 
-    Work gate (same pattern as SCC's ``trim_min_vertices``): the init
+    Work gate: the init
     phase costs a fixed ladder of ~``local_iters + block_iters`` tiny
     barrier jobs, which only pays for itself when each SAVED global
     iteration moves enough edge bytes — measured crossover is well above

@@ -42,10 +42,8 @@ def truncated_harmonic(
         .select("src_id", "dst_id")
         .distinct()
     )
-    dist = (
-        e.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
-        .withColumn("d", F.lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    dist = e.select(
+        F.col("src_id").alias("u"), F.col("dst_id").alias("v"), F.lit(1).alias("d")
     )
     frontier = dist
     for r in range(2, radius + 1):
@@ -63,12 +61,10 @@ def truncated_harmonic(
             dist.unionAll(expanded)
             .groupBy("u", "v")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint(eager=True)
         )
         # next frontier: pairs whose shortest distance IS r (newly reached)
         frontier = merged.filter(F.col("d") == r)
-        dist.unpersist()
         dist = merged
     h = dist.groupBy("u").agg(F.sum(F.lit(1.0) / F.col("d")).alias("harmonic"))
     out = (

@@ -7,31 +7,131 @@ ranking, but the per-iteration scalar is a plain SUM, which keeps the
 DuckDB oracle an exact unrolled-CTE mirror (an L2 norm's sqrt would
 introduce a second association order to match).
 
-Execution shape mirrors pagerank.py: edges hash-partitioned + persisted
-once; per iteration two join+agg passes (auth from hubs, hubs from auth)
-and ONE driver action collecting the normalizing sums AND the L1 delta of
-the *previous* transition (the scores frame carries last iteration's
-values as extra columns, so the delta needs no second pass — convergence
-is checked one iteration late, costing at most one extra iteration but
-halving driver barriers); lineage truncated every 2 iterations.
+Execution shape: :func:`hub_authority` is the step HITS and SALSA
+(``graph/salsa.py``) share, run by the superstep loop
+(``graph/superstep.py``) over one
+:func:`~amanogawa_spark.graph.pagerank.two_way_layout`: the edge table
+hashed on ``src_id`` and again on ``dst_id``, so a forward push (along
+out-edges) and a backward push (along in-edges) are each a narrow join
+plus an O(V) ``groupBy``. HITS is forward(hub), then backward(the new
+authority), every edge weighing 1. Each iteration is ONE job: the state
+carries iteration k's raw scores and iteration k-1's normalized ones, and
+the L1 sums of the raw scores and the L1 delta of the k-2 → k-1
+transition are observed in that job. Convergence is therefore seen one
+iteration late (at most one extra iteration; the first iteration's delta
+measures the start vector against zero). The returned scores are the
+final raw scores over their observed sums — no extra job.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from amanogawa_spark.graph.pagerank import two_way_layout
+from amanogawa_spark.graph.superstep import supersteps
+
+# push(frame (id, x), forward) -> (id, x); chain(push, scores) -> the raw
+# (authority, hub) frames of one iteration from the normalized scores
+Push = Callable[[DataFrame, bool], DataFrame]
 
 
 @dataclass
 class HitsResult:
     scores: DataFrame  # (id long, hub double, authority double)
     iterations: int
-    delta: float
+    delta: float  # lagged L1 delta of the last round, -1.0 when none ran
     history: list[dict] = field(default_factory=list)
+
+
+def _normalized(raw: str, total: float) -> F.Column:
+    return F.col(raw) / F.lit(total or 1.0)
+
+
+def hub_authority(
+    vertices: DataFrame,
+    edges: DataFrame,
+    chain: Callable[[Push, DataFrame], tuple[DataFrame, DataFrame]],
+    tol: float,
+    max_iter: int,
+    num_partitions: int | None,
+) -> HitsResult:
+    """Iterate ``chain`` from the uniform vector until the lagged L1 delta
+    is at most ``tol``. ``edges`` is (src_id, dst_id, w_out, w_in): a value
+    pushed forward along an edge is multiplied by ``w_out``, backward by
+    ``w_in``. ``chain(push, scores)`` maps the normalized ``(id, hub,
+    authority)`` scores to the raw authority and hub frames ``(id, x)``."""
+    with two_way_layout(vertices, edges, num_partitions) as lay:
+
+        def push(frame: DataFrame, forward: bool) -> DataFrame:
+            w = F.col("w_out" if forward else "w_in")
+            return lay.contributions(frame, forward).agg(F.sum(F.col("x") * w).alias("x"))
+
+        def step(state: DataFrame, prev: dict) -> DataFrame:
+            scores = state.select(
+                "id",
+                _normalized("hub_raw", prev["hub_sum"]).alias("hub"),
+                _normalized("auth_raw", prev["auth_sum"]).alias("authority"),
+                F.col("hub").alias("p_hub"),
+                F.col("authority").alias("p_auth"),
+            )
+            auth, hub = chain(push, scores)
+            return (
+                scores.join(auth.hint("shuffle_hash"), "id", "left")
+                .withColumnRenamed("x", "auth_raw")
+                .join(hub.hint("shuffle_hash"), "id", "left")
+                .select(
+                    "id",
+                    "hub",
+                    "authority",
+                    (
+                        F.abs(F.col("hub") - F.col("p_hub"))
+                        + F.abs(F.col("authority") - F.col("p_auth"))
+                    ).alias("d"),
+                    F.coalesce("x", F.lit(0.0)).alias("hub_raw"),
+                    F.coalesce("auth_raw", F.lit(0.0)).alias("auth_raw"),
+                )
+            )
+
+        u = F.lit(1.0 / max(lay.n, 1))
+        run = supersteps(
+            lay.verts.select(
+                "id",
+                u.alias("hub_raw"),
+                u.alias("auth_raw"),
+                F.lit(0.0).alias("hub"),
+                F.lit(0.0).alias("authority"),
+            ),
+            step,
+            {
+                "hub_sum": F.sum("hub_raw"),
+                "auth_sum": F.sum("auth_raw"),
+                "delta": F.sum("d"),
+            },
+            max_iter,
+            lambda m, _: m["delta"] <= tol,
+            start_metrics={"hub_sum": 1.0, "auth_sum": 1.0},
+        )
+    m = run.metrics
+    return HitsResult(
+        scores=run.state.select(
+            "id",
+            _normalized("hub_raw", m["hub_sum"]).alias("hub"),
+            _normalized("auth_raw", m["auth_sum"]).alias("authority"),
+        ),
+        iterations=run.rounds,
+        delta=m.get("delta", -1.0),
+        history=run.history,
+    )
+
+
+def _hits_chain(push: Push, scores: DataFrame) -> tuple[DataFrame, DataFrame]:
+    # the classic two-phase update: hubs from the NEW (raw) authorities
+    auth = push(scores.select("id", F.col("hub").alias("x")), True)
+    return auth, push(auth, False)
 
 
 def hits(
@@ -41,134 +141,12 @@ def hits(
     max_iter: int = 50,
     num_partitions: int | None = None,
 ) -> HitsResult:
-    spark = vertices.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = (
+    unit = (
         edges.select("src_id", "dst_id")
         .distinct()
-        .repartition(n_part, "src_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("*", F.lit(1.0).alias("w_out"), F.lit(1.0).alias("w_in"))
     )
-    e.count()
-    verts = (
-        vertices.select("id").distinct().repartition(n_part, "id").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
-    n = verts.count()
-    if n == 0:
-        empty = verts.select(
-            "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
-        )
-        return HitsResult(empty, 0, 0.0)
-
-    # scores carries (hub, authority) for iteration k-1 AND (p_hub, p_auth)
-    # for k-2, so the per-iteration stats aggregate can compute the k-2→k-1
-    # L1 delta without a second driver action.
-    scores = verts.select(
-        "id",
-        F.lit(1.0 / n).alias("hub"),
-        F.lit(1.0 / n).alias("authority"),
-        F.lit(1.0 / n).alias("p_hub"),
-        F.lit(1.0 / n).alias("p_auth"),
-    ).localCheckpoint(eager=True)
-
-    history: list[dict] = []
-    delta = float("inf")
-    it = 0
-    prev_cached = None
-    while it < max_iter and delta > tol:
-        t0 = time.time()
-        it += 1
-        # authority' (unnormalized) = sum of in-neighbor hub scores
-        auth_raw = (
-            e.join(
-                scores.select(F.col("id").alias("src_id"), "hub").hint(
-                    "shuffle_hash"
-                ),
-                "src_id",
-            )
-            .groupBy(F.col("dst_id").alias("id"))
-            .agg(F.sum("hub").alias("auth_raw"))
-        )
-        # hub' (unnormalized) = sum of out-neighbor NEW authorities — the
-        # classic two-phase update within one iteration
-        hub_raw = (
-            e.join(
-                auth_raw.select(F.col("id").alias("dst_id"), "auth_raw").hint(
-                    "shuffle_hash"
-                ),
-                "dst_id",
-            )
-            .groupBy(F.col("src_id").alias("id"))
-            .agg(F.sum("auth_raw").alias("hub_raw"))
-        )
-        joined = (
-            verts.join(auth_raw.hint("shuffle_hash"), "id", "left")
-            .join(hub_raw.hint("shuffle_hash"), "id", "left")
-            .join(
-                scores.select(
-                    "id",
-                    F.col("hub").alias("old_hub"),
-                    F.col("authority").alias("old_auth"),
-                    "p_hub",
-                    "p_auth",
-                ).hint("shuffle_hash"),
-                "id",
-            )
-            .select(
-                "id",
-                F.coalesce("auth_raw", F.lit(0.0)).alias("auth_raw"),
-                F.coalesce("hub_raw", F.lit(0.0)).alias("hub_raw"),
-                "old_hub",
-                "old_auth",
-                "p_hub",
-                "p_auth",
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # THE one driver action: normalizing sums for iteration k plus the
-        # L1 delta of the k-2 → k-1 transition (both score generations ride
-        # along in the scores frame, so no second pass is needed).
-        stats = joined.agg(
-            F.sum("auth_raw").alias("sa"),
-            F.sum("hub_raw").alias("sh"),
-            F.sum(
-                F.abs(F.col("old_hub") - F.col("p_hub"))
-                + F.abs(F.col("old_auth") - F.col("p_auth"))
-            ).alias("dprev"),
-        ).collect()[0]
-        sa = stats["sa"] or 1.0
-        sh = stats["sh"] or 1.0
-        if it >= 2:  # it==1's dprev compares the duplicated init vector (0.0)
-            delta = stats["dprev"] or 0.0
-        scores = joined.select(
-            "id",
-            (F.col("hub_raw") / F.lit(sh)).alias("hub"),
-            (F.col("auth_raw") / F.lit(sa)).alias("authority"),
-            F.col("old_hub").alias("p_hub"),
-            F.col("old_auth").alias("p_auth"),
-        )
-        if it % 2 == 0:
-            scores = scores.localCheckpoint(eager=False)
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = joined
-        history.append(
-            {
-                "iteration": it,
-                "l1_delta_prev": float(stats["dprev"] or 0.0),
-                "seconds": time.time() - t0,
-            }
-        )
-
-    scores = scores.select("id", "hub", "authority").localCheckpoint(eager=True)
-    if prev_cached is not None:
-        prev_cached.unpersist()
-    e.unpersist()
-    verts.unpersist()
-    return HitsResult(scores=scores, iterations=it, delta=float(delta), history=history)
+    return hub_authority(vertices, unit, _hits_chain, tol, max_iter, num_partitions)
 
 
 def hits_fixed_iterations(

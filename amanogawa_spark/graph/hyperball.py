@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from amanogawa_spark.graph.superstep import checkpoint_observing
 from amanogawa_spark.operators.sketch import _h32_md5, _rho
 
 
@@ -52,24 +53,25 @@ def hyperball_registers(
         vertices.select("id", b0.alias("bucket"), r0.alias("rho"))
         .groupBy("id", "bucket")
         .agg(F.max("rho").alias("rho"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     for _ in range(radius):
-        # u's next ball absorbs every out-neighbor w's current ball
-        contrib = e.join(
-            state.select(F.col("id").alias("dst_id"), "bucket", "rho"), "dst_id"
-        ).select(F.col("src_id").alias("id"), "bucket", "rho")
-        nxt = (
-            state.unionAll(contrib)
-            .groupBy("id", "bucket")
-            .agg(F.max("rho").alias("rho"))
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        nxt.count()
-        state.unpersist()
-        state = nxt
+        state = _relax(e, state)
     return state
+
+
+def _relax(e: DataFrame, state: DataFrame) -> DataFrame:
+    """One relaxation round, materialized by an eager local checkpoint:
+    each vertex u's next ball absorbs every out-neighbor w's current ball
+    (register-wise max over ``e``'s (src_id, dst_id) edges)."""
+    contrib = e.join(
+        state.select(F.col("id").alias("dst_id"), "bucket", "rho"), "dst_id"
+    ).select(F.col("src_id").alias("id"), "bucket", "rho")
+    return (
+        state.unionAll(contrib)
+        .groupBy("id", "bucket")
+        .agg(F.max("rho").alias("rho"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def hyperball_estimates(registers: DataFrame, p: int = 6) -> DataFrame:
@@ -123,35 +125,21 @@ def neighborhood_function(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    state = hyperball_registers(vertices, e, radius=0, p=p).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    state = hyperball_registers(vertices, e, radius=0, p=p)
     curve: list[tuple[int, float]] = []
     prev_total = float(
         hyperball_estimates(state, p).agg(F.sum("estimate")).collect()[0][0] or 0.0
     )
     curve.append((0, prev_total))
     for r in range(1, max_radius + 1):
-        contrib = e.join(
-            state.select(F.col("id").alias("dst_id"), "bucket", "rho"), "dst_id"
-        ).select(F.col("src_id").alias("id"), "bucket", "rho")
-        nxt = (
-            state.unionAll(contrib)
-            .groupBy("id", "bucket")
-            .agg(F.max("rho").alias("rho"))
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        state = _relax(e, state)
         total = float(
-            hyperball_estimates(nxt, p).agg(F.sum("estimate")).collect()[0][0] or 0.0
+            hyperball_estimates(state, p).agg(F.sum("estimate")).collect()[0][0] or 0.0
         )
-        state.unpersist()
-        state = nxt
         curve.append((r, total))
         if prev_total > 0 and abs(total - prev_total) / prev_total < rel_tol:
             break
         prev_total = total
-    state.unpersist()
     e.unpersist()
     return curve
 
@@ -202,33 +190,23 @@ def hyperball_closeness(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    state = hyperball_registers(vertices, e, radius=0, p=p).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    state = hyperball_registers(vertices, e, radius=0, p=p)
     est0 = hyperball_estimates(state, p)
-    acc = est0.select(
-        "id",
-        F.col("estimate").alias("b0"),
-        F.col("estimate").alias("prev"),
-        F.lit(0.0).alias("sum_dist"),
-    ).localCheckpoint(eager=True)
-    prev_total = float(acc.agg(F.sum("prev")).collect()[0][0] or 0.0)
+    acc, m = checkpoint_observing(
+        est0.select(
+            "id",
+            F.col("estimate").alias("b0"),
+            F.col("estimate").alias("prev"),
+            F.lit(0.0).alias("sum_dist"),
+        ),
+        {"total": F.sum("prev")},
+    )
+    prev_total = float(m["total"])
     for r in range(1, max_radius + 1):
-        contrib = e.join(
-            state.select(F.col("id").alias("dst_id"), "bucket", "rho"), "dst_id"
-        ).select(F.col("src_id").alias("id"), "bucket", "rho")
-        nxt = (
-            state.unionAll(contrib)
-            .groupBy("id", "bucket")
-            .agg(F.max("rho").alias("rho"))
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        est_r = hyperball_estimates(nxt, p).withColumnRenamed("estimate", "cur")
-        old_acc = acc
-        acc = (
-            acc.join(est_r, "id")
-            .select(
+        state = _relax(e, state)
+        est_r = hyperball_estimates(state, p).withColumnRenamed("estimate", "cur")
+        acc, m = checkpoint_observing(
+            acc.join(est_r, "id").select(
                 "id",
                 "b0",
                 F.col("cur").alias("prev"),
@@ -236,17 +214,13 @@ def hyperball_closeness(
                     F.col("sum_dist")
                     + F.lit(float(r)) * (F.col("cur") - F.col("prev"))
                 ).alias("sum_dist"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            {"total": F.sum("prev")},
         )
-        old_acc.unpersist()
-        state.unpersist()
-        state = nxt
-        total = float(acc.agg(F.sum("prev")).collect()[0][0] or 0.0)
+        total = float(m["total"])
         if prev_total > 0 and abs(total - prev_total) / prev_total < rel_tol:
             break
         prev_total = total
-    state.unpersist()
     e.unpersist()
     return acc.select(
         "id",

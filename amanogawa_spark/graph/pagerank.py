@@ -17,6 +17,9 @@ Scale design (SURVEY.md §4.2) — one loop, two layouts:
   degree-annotated edge table on ``src_id`` and joins the state to it
   narrowly on ``src_id``; the pid-clustered layout (``graph/blocked.py``)
   hashes it on ``(spid, salt)`` and re-hashes the state to match.
+  :func:`scoped_layout` also makes :func:`two_way_layout` (the edge table
+  hashed on ``src_id`` and again on ``dst_id``) for HITS, SALSA and SCC,
+  whose pushes run both ways along the edges.
 - :func:`power_iterate` is PageRank's step over any layout (``pagerank``,
   ``personalized_pagerank``, ``blocked_pagerank``); the shared superstep
   loop (``graph/superstep.py``) runs it, with its snapshots every
@@ -41,9 +44,9 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Any, Callable, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -67,12 +70,13 @@ class PageRankResult:
 
 @dataclass
 class LoopLayout:
-    edges: DataFrame  # persisted edge table
+    edges: tuple[DataFrame, ...]  # persisted edge tables
     verts: DataFrame  # (id, dang[, layout columns]) hashed on id
     n: int  # vertex count
     n_dangling: int
-    # state -> (id, in_mass): rank pushed along the cached out-edges
-    contributions: Callable[[DataFrame], DataFrame]
+    # the push along the cached edges; on PageRank's layouts
+    # state -> (id, in_mass), the rank pushed along the out-edges
+    contributions: Callable[..., Any]
 
 
 @contextmanager
@@ -80,9 +84,7 @@ def scoped_layout(
     edges: DataFrame,
     num_partitions: int | None,
     adaptive: bool,
-    build: Callable[
-        [int], tuple[DataFrame, DataFrame, Callable[[DataFrame], DataFrame]]
-    ],
+    build: Callable[[int], tuple[tuple[DataFrame, ...], DataFrame, Callable[..., Any]]],
 ) -> Iterator[LoopLayout]:
     """Persisted edge and vertex layouts for a PageRank-shaped loop, with
     the loop conf in force for the whole ``with`` block.
@@ -93,14 +95,14 @@ def scoped_layout(
     pinned to that count) is entered BEFORE ``build(n_part)`` runs, so the
     cached relations report their ``HashPartitioning`` with exactly the
     partition count the loop's own exchanges use — the precondition for
-    narrow per-iteration joins. ``build`` returns the edge table, the
+    narrow per-iteration joins. ``build`` returns the edge tables, the
     vertex table (``id``, ``dang`` = 1.0 for vertices without out-edges,
     plus any layout columns; hashed on ``id`` here) and the contributions
-    step over the edge table. The edge table is persisted first, so a
-    vertex table derived from it reads its cache. Both caches are released
-    and the conf restored on exit; results handed out of the block must
-    already be materialized (``localCheckpoint``) or they recompute from
-    the sources.
+    step over the edge tables. The edge tables are persisted first, in
+    order, so a table derived from an earlier one reads its cache. All
+    caches are released and the conf restored on exit; results handed out
+    of the block must already be materialized (``localCheckpoint``) or
+    they recompute from the sources.
     """
     spark = edges.sparkSession
     n_part = num_partitions
@@ -108,17 +110,18 @@ def scoped_layout(
         session = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_part = min(session, max(2, edges.count() // EDGES_PER_PARTITION + 1))
     with iteration_conf(spark, disable_aqe=not adaptive, shuffle_partitions=n_part):
-        edges_w, verts, contributions = build(n_part)
-        edges_w.persist(StorageLevel.MEMORY_AND_DISK)
+        tables, verts, contributions = build(n_part)
+        for t in tables:
+            t.persist(StorageLevel.MEMORY_AND_DISK)
         verts = verts.repartition(n_part, "id").persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            # one job materializes the vertex cache; the edge cache fills
-            # inside the first job that reads it
+            # one job materializes the vertex cache; the edge caches fill
+            # inside the first job that reads them
             n, n_dang = verts.agg(F.count("*"), F.sum("dang")).collect()[0]
-            yield LoopLayout(edges_w, verts, int(n), int(n_dang or 0), contributions)
+            yield LoopLayout(tables, verts, int(n), int(n_dang or 0), contributions)
         finally:
-            edges_w.unpersist()
-            verts.unpersist()
+            for t in (*tables, verts):
+                t.unpersist()
 
 
 @contextmanager
@@ -155,9 +158,39 @@ def loop_layout(
             .join(out_deg.withColumnRenamed("src_id", "id"), "id", "left")
             .select("id", F.col("out_degree").isNull().cast("double").alias("dang"))
         )
-        return edges_w, verts, lambda s: _contributions(edges_w, s, "rank", weight_col)
+        return (edges_w,), verts, lambda s: _contributions(edges_w, s, "rank", weight_col)
 
     with scoped_layout(edges, num_partitions, adaptive, build) as lay:
+        yield lay
+
+
+@contextmanager
+def two_way_layout(
+    vertices: DataFrame, edges: DataFrame, num_partitions: int | None = None
+) -> Iterator[LoopLayout]:
+    """``edges`` (``src_id``, ``dst_id`` and any weight columns) persisted
+    twice — hashed on ``src_id`` and again on ``dst_id`` — and the
+    vertex table, built by :func:`scoped_layout`; no caller has a
+    dangling term, so ``dang`` is 0 and ``n_dangling`` 0. Its
+    contributions step ``along(frame, forward)`` joins an O(V) frame
+    ``(id, ...)`` hashed on ``id`` narrowly to its vertices' out-edges
+    (``forward``) or in-edges and groups the rows by the far end, as
+    ``id``; the caller picks the aggregate (HITS, SALSA and SCC)."""
+
+    def build(n_part: int):
+        fwd = edges.repartition(n_part, "src_id")
+        bwd = fwd.repartition(n_part, "dst_id")
+        verts = vertices.select("id").distinct().withColumn("dang", F.lit(0.0))
+
+        def along(frame: DataFrame, forward: bool) -> GroupedData:
+            e, key, far = (fwd, "src_id", "dst_id") if forward else (bwd, "dst_id", "src_id")
+            return e.join(
+                frame.withColumnRenamed("id", key).hint("shuffle_hash"), key
+            ).groupBy(F.col(far).alias("id"))
+
+        return (fwd, bwd), verts, along
+
+    with scoped_layout(edges, num_partitions, False, build) as lay:
         yield lay
 
 
@@ -404,7 +437,7 @@ def katz_centrality(
         return supersteps(
             lay.verts.select("id", F.lit(beta).alias("katz")),
             lambda scores, _: scores.join(
-                _contributions(lay.edges, scores, "katz").hint("shuffle_hash"),
+                _contributions(lay.edges[0], scores, "katz").hint("shuffle_hash"),
                 "id",
                 "left",
             ).select(

@@ -10,29 +10,34 @@ sanity check: the in-degree-proportional vector is an EXACT fixed point
 of the authority chain (resp. out-degree for hubs) on a connected
 support, which the pytest pins.
 
-Execution shape mirrors :mod:`amanogawa_spark.graph.hits`: the edge table
-is joined with its in/out-degree weights ONCE, hash-partitioned and
-persisted; each iteration is two join+agg passes per chain plus two O(1)
-driver scalars (norms, then delta); the oracle variant runs fixed iterations
-so the DuckDB unrolled-CTE mirror is exact. L1 renormalization per
-iteration keeps mass comparisons stable when the support has isolated or
-dangling vertices (where the pure chain would leak mass).
+Execution shape: HITS' step (:func:`~amanogawa_spark.graph.hits.hub_authority`)
+over the same two-direction layout, with the edge table carrying the
+walk's ``w_out`` = 1/outdeg and ``w_in`` = 1/indeg weights, computed
+once. Per iteration the authority chain is backward-then-forward and the
+hub chain forward-then-backward, four narrow pushes in ONE job whose L1
+sums and lagged delta are observed in the same pass — so a converged run
+may take one iteration more than a same-iteration delta would. The
+oracle variant runs fixed iterations so the DuckDB unrolled-CTE mirror is
+exact. L1 renormalization per iteration keeps mass comparisons stable
+when the support has isolated or dangling vertices (where the pure chain
+would leak mass).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from amanogawa_spark.graph.hits import HitsResult, Push, hub_authority
+
+SalsaResult = HitsResult  # scores, iterations, delta, history
 
 
-@dataclass
-class SalsaResult:
-    scores: DataFrame  # (id long, hub double, authority double)
-    iterations: int
-    delta: float
+def _salsa_chain(push: Push, scores: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def walk(col: str, forward: bool) -> DataFrame:  # one step there and back
+        return push(push(scores.select("id", F.col(col).alias("x")), forward), not forward)
+
+    return walk("authority", False), walk("hub", True)
 
 
 def salsa(
@@ -42,119 +47,11 @@ def salsa(
     max_iter: int = 50,
     num_partitions: int | None = None,
 ) -> SalsaResult:
-    spark = vertices.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e0 = edges.select("src_id", "dst_id").distinct()
-    outd = e0.groupBy("src_id").agg((1.0 / F.count("*")).alias("w_out"))
-    ind = e0.groupBy("dst_id").agg((1.0 / F.count("*")).alias("w_in"))
-    # weighted edge table built once: (src_id, dst_id, w_out, w_in)
-    e = (
-        e0.join(outd, "src_id")
-        .join(ind, "dst_id")
-        .repartition(n_part, "src_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
-
-    verts = vertices.select("id").distinct().repartition(n_part, "id")
-    n = verts.count()
-    if n == 0:
-        empty = verts.select(
-            "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
-        )
-        return SalsaResult(scores=empty, iterations=0, delta=0.0)
-
-    scores = verts.select(
-        "id", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("authority")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    iterations, delta = 0, float("inf")
-    for it in range(1, max_iter + 1):
-        prev = scores
-        # authority chain: back along in-links, forward along out-links
-        t = (
-            e.join(
-                prev.select(F.col("id").alias("dst_id"), F.col("authority").alias("a")),
-                "dst_id",
-            )
-            .groupBy("src_id")
-            .agg(F.sum(F.col("a") * F.col("w_in")).alias("t"))
-        )
-        a_raw = (
-            e.join(t, "src_id")
-            .groupBy(F.col("dst_id").alias("id"))
-            .agg(F.sum(F.col("t") * F.col("w_out")).alias("a_raw"))
-        )
-        # hub chain: forward along out-links, back along in-links
-        s = (
-            e.join(
-                prev.select(F.col("id").alias("src_id"), F.col("hub").alias("h")),
-                "src_id",
-            )
-            .groupBy("dst_id")
-            .agg(F.sum(F.col("h") * F.col("w_out")).alias("s"))
-        )
-        h_raw = (
-            e.join(s, "dst_id")
-            .groupBy(F.col("src_id").alias("id"))
-            .agg(F.sum(F.col("s") * F.col("w_in")).alias("h_raw"))
-        )
-        raw = (
-            verts.join(a_raw, "id", "left")
-            .join(h_raw, "id", "left")
-            .select(
-                "id",
-                F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
-                F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        agg = raw.agg(
-            F.sum("a_raw").alias("a_sum"), F.sum("h_raw").alias("h_sum")
-        ).collect()[0]
-        a_sum = agg["a_sum"] or 1.0
-        h_sum = agg["h_sum"] or 1.0
-        nxt = raw.select(
-            "id",
-            (F.col("h_raw") / h_sum).alias("hub"),
-            (F.col("a_raw") / a_sum).alias("authority"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        delta = (
-            nxt.join(
-                prev.select(
-                    "id", F.col("hub").alias("ph"), F.col("authority").alias("pa")
-                ),
-                "id",
-            )
-            .agg(
-                F.sum(
-                    F.abs(F.col("hub") - F.col("ph"))
-                    + F.abs(F.col("authority") - F.col("pa"))
-                ).alias("d")
-            )
-            .collect()[0]["d"]
-            or 0.0
-        )
-        prev.unpersist()
-        raw.unpersist()
-        if it % 4 == 0:
-            # release the persisted frame once its checkpoint exists — the
-            # next round's prev.unpersist() only sees the checkpoint handle,
-            # so skipping this leaks one MEMORY_AND_DISK cache per 4 iters
-            chk = nxt.localCheckpoint(eager=True)
-            nxt.unpersist()
-            scores = chk
-        else:
-            scores = nxt
-        iterations = it
-        if delta <= tol:
-            break
-    # materialize the result before releasing the caches it depends on
-    out = scores.select("id", "hub", "authority").localCheckpoint(eager=True)
-    scores.unpersist()
-    e.unpersist()
-    return SalsaResult(scores=out, iterations=iterations, delta=float(delta))
+    e = edges.select("src_id", "dst_id").distinct()
+    outd = e.groupBy("src_id").agg((1.0 / F.count("*")).alias("w_out"))
+    ind = e.groupBy("dst_id").agg((1.0 / F.count("*")).alias("w_in"))
+    weighted = e.join(outd, "src_id").join(ind, "dst_id")
+    return hub_authority(vertices, weighted, _salsa_chain, tol, max_iter, num_partitions)
 
 
 def salsa_fixed_iterations(

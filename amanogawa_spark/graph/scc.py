@@ -25,137 +25,70 @@ rounds — measured, not hypothetical. Hence no round-bound knob.) Each
 outer round removes at least the SCC of the minimum active vertex (its
 f and b are provably itself), so the peel terminates.
 
-Scale shape per inner round: one join shuffling the O(V) label side
-against the edge table (hash-partitioned once per outer round) + a
-map-side-combined min aggregate; the convergence signal is a single
-1-row sum (labels only decrease, so an unchanged sum means a fixpoint —
-one cheap action, no exceptAll scan). Lineage truncated every round;
-per-round caches released as soon as their successor materializes.
+Execution shape: every loop is the engine's superstep loop
+(``graph/superstep.py``) over one
+:func:`~amanogawa_spark.graph.pagerank.two_way_layout` (the edge table
+hashed on ``src_id`` and again on ``dst_id``), so each round is one job
+and each propagation a narrow join plus an O(V) min aggregate. The outer
+peel is one round per peel over the ``(id, scc)`` frame, NULL meaning
+"still active" — which is also its snapshot format; it observes the
+active count and stops at 0. Inside a peel round, the trim stops once
+the core count repeats (one job when nothing is left to trim), and each
+min-label fixpoint stops when no label changed — a changed-label COUNT,
+not a sum of labels: with ``xxhash64`` vertex ids (the web-scale id path)
+label values sit near ±2^63, where an ANSI-mode long sum overflows and a
+double sum loses the low bits and can declare a false fixpoint.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from amanogawa_spark.checkpoint import CheckpointManager
+from amanogawa_spark.graph.pagerank import LoopLayout, two_way_layout
+from amanogawa_spark.graph.superstep import supersteps
+
+def _min_labels(lay: LoopLayout, labels: DataFrame, n: int, forward: bool) -> DataFrame:
+    """Run ``labels`` (id, lab, [extra...]) to the fixpoint where lab = min
+    start label with a directed path to v inside the labelled set (along
+    reversed edges unless ``forward``); extra columns ride along and an
+    ``old`` column is added. Labels only decrease; a path has at most
+    ``n - 1`` hops, so ``n + 1`` rounds always reach the fixpoint and see
+    it."""
+    keep = [c for c in labels.columns if c not in ("lab", "old")]
+
+    def step(labels: DataFrame, _) -> DataFrame:
+        reach = lay.contributions(labels.select("id", F.col("lab").alias("x")), forward)
+        return labels.join(
+            reach.agg(F.min("x").alias("x")).hint("shuffle_hash"), "id", "left"
+        ).select(*keep, F.least("lab", "x").alias("lab"), F.col("lab").alias("old"))
+
+    return supersteps(
+        labels,
+        step,
+        {"changed": F.count_if(F.col("lab") != F.col("old"))},
+        n + 1,
+        lambda m, _: m["changed"] == 0,
+        start_metrics={},
+    ).state
 
 
-def _min_label_fixpoint(
-    verts: DataFrame,
-    edges: DataFrame,
-    src: str,
-    dst: str,
-) -> DataFrame:
-    """(id, lab): lab = min id with a directed path to v along src→dst.
-
-    Labels start at the vertex id and only decrease. The convergence
-    signal is the COUNT of labels that changed this round (one 1-row
-    action over the same frame the round materializes anyway) — NOT a
-    sum of label values: with ``xxhash64`` vertex ids (the web-scale id
-    path) label values sit near ±2^63 and an ANSI-mode sum overflows
-    long on the first aggregate; a double-typed sum silently loses the
-    low bits and can declare a false fixpoint. Measured, not
-    hypothetical: the 200k-page hash-id probe overflowed immediately.
-    """
-    labels = verts.select("id", F.col("id").alias("lab")).persist(
-        StorageLevel.MEMORY_AND_DISK
+def _trim(lay: LoopLayout, core: DataFrame) -> DataFrame:
+    """FW-BW-**Trim**: keep the vertices with an in- and an out-edge inside
+    ``core``; each one dropped is its own singleton SCC. On bowtie-shaped
+    web graphs the IN/OUT tendrils and disconnected fringe are a large
+    share of vertices, and removing them shrinks every later propagation."""
+    live = (
+        lay.edges[0]
+        .join(core.withColumnRenamed("id", "src_id").hint("shuffle_hash"), "src_id", "left_semi")
+        .join(core.withColumnRenamed("id", "dst_id").hint("shuffle_hash"), "dst_id", "left_semi")
     )
-    while True:
-        incoming = (
-            edges.join(
-                labels.select(F.col("id").alias(src), "lab").hint("shuffle_hash"),
-                src,
-            )
-            .groupBy(F.col(dst).alias("id"))
-            .agg(F.min("lab").alias("in_lab"))
-        )
-        stepped = (
-            labels.select("id", F.col("lab").alias("_old"))
-            .join(incoming.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                "_old",
-                F.least("_old", F.coalesce("in_lab", "_old")).alias("lab"),
-            )
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_changed = (
-            stepped.agg(
-                F.sum((F.col("lab") != F.col("_old")).cast("long"))
-            ).collect()[0][0]
-            or 0
-        )
-        labels.unpersist()
-        # keep the PERSISTED handle itself (a .select() projection would
-        # make the caller's unpersist a cache-manager no-op); the extra
-        # _old column is dropped by every downstream projection
-        labels = stepped
-        if n_changed == 0:
-            break
-    return labels
-
-
-def _trim_trivial(
-    active: DataFrame, e_act: DataFrame, max_trim: int
-) -> tuple[DataFrame, DataFrame, list[DataFrame], list[DataFrame]]:
-    """FW-BW-**Trim**: peel vertices with no in- or no out-edge in the
-    active subgraph — each is its own singleton SCC — before paying for
-    the double min-label fixpoint.
-
-    On bowtie-shaped web graphs the IN/OUT tendrils and disconnected
-    fringe are a large share of vertices; removing them shrinks every
-    subsequent propagation round's join input. Each trim round costs two
-    distinct-projections + two semi-joins + one count — about one
-    fixpoint propagation round — and is capped at ``max_trim`` (a long
-    chain would otherwise trim one layer per round; past the cap the
-    fixpoint handles what's left).
-
-    Returns (core_active, core_edges, singleton_parts, handles_to_unpersist).
-    """
-    singles: list[DataFrame] = []
-    handles: list[DataFrame] = []
-    cur_v, cur_e = active, e_act
-    if max_trim <= 0:
-        return cur_v, cur_e, singles, handles
-    n_cur = active.count()
-    for _ in range(max_trim):
-        has_out = cur_e.select(F.col("src_id").alias("id")).distinct()
-        has_in = cur_e.select(F.col("dst_id").alias("id")).distinct()
-        core = (
-            cur_v.join(has_out, "id", "left_semi")
-            .join(has_in, "id", "left_semi")
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_core = core.count()
-        if n_core == n_cur:
-            core.unpersist()
-            break
-        trimmed = (
-            cur_v.join(core, "id", "left_anti")
-            .select("id", F.col("id").alias("scc"))
-            .localCheckpoint(eager=True)
-        )
-        singles.append(trimmed)
-        new_e = (
-            cur_e.join(core.select(F.col("id").alias("src_id")), "src_id", "left_semi")
-            .join(core.select(F.col("id").alias("dst_id")), "dst_id", "left_semi")
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if cur_v is not active:
-            cur_v.unpersist()
-        if cur_e is not e_act:
-            cur_e.unpersist()
-        cur_v, cur_e, n_cur = core, new_e, n_core
-        if n_core == 0:
-            break
-    if cur_v is not active:
-        handles.append(cur_v)
-    if cur_e is not e_act:
-        handles.append(cur_e)
-    return cur_v, cur_e, singles, handles
+    return core.join(
+        live.select(F.col("src_id").alias("id")).hint("shuffle_hash"), "id", "left_semi"
+    ).join(live.select(F.col("dst_id").alias("id")).hint("shuffle_hash"), "id", "left_semi")
 
 
 def strongly_connected_components(
@@ -163,15 +96,17 @@ def strongly_connected_components(
     edges: DataFrame,
     max_outer: int = 100,
     max_trim: int = 5,
-    trim_min_vertices: int = 10_000,
-    checkpoint=None,
+    checkpoint: CheckpointManager | None = None,
 ) -> DataFrame:
     """(id, scc) — scc is the minimum vertex id of each strong component.
 
     Exact. Every propagation runs to its fixpoint (required for
     correctness — see the module docstring); on bowtie-shaped web graphs
     the giant SCC and most of the condensation peel off in the first
-    outer round.
+    outer round. ``max_trim`` caps the trim rounds per peel (a long chain
+    trims one layer per round; past the cap the fixpoint handles it). The
+    trim pays at every size measured with ``tools/scc_probe.py`` on 4
+    cores, 1,000 to 200,000 pages: 1.3-2.4x faster than ``max_trim=0``.
 
     Contract when ``max_outer`` is exhausted before the peel completes:
     unassigned vertices are returned with ``scc IS NULL`` and a WARNING
@@ -180,108 +115,62 @@ def strongly_connected_components(
 
     ``checkpoint``: optional
     :class:`~amanogawa_spark.checkpoint.CheckpointManager` — after each
-    outer round the full peel state is snapshotted as one frame
-    (``(id, scc)`` with NULL scc = still active), so a killed superjob
-    resumes at the last completed round (north rule: every iteration
-    resumable, with per-partition lineage manifests + metrics journal).
+    outer round the ``(id, scc)`` frame is snapshotted and its active
+    count journaled, so a killed superjob resumes at the last completed
+    round (north rule: every iteration resumable).
     """
-    active = (
-        vertices.select("id").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_all = edges.select("src_id", "dst_id").filter(
-        F.col("src_id") != F.col("dst_id")
-    )
-    done_parts: list[DataFrame] = []
-    start_round = 0
-    if checkpoint is not None:
-        last = checkpoint.latest_iteration()
-        if last is not None:
-            state = checkpoint.load(last)
-            done_parts = [state.filter(F.col("scc").isNotNull())]
-            resumed = (
-                state.filter(F.col("scc").isNull())
-                .select("id")
-                .persist(StorageLevel.MEMORY_AND_DISK)
+    directed = edges.select("src_id", "dst_id").filter(F.col("src_id") != F.col("dst_id"))
+    with two_way_layout(vertices, directed) as lay:
+
+        def peel(state: DataFrame, prev: dict) -> DataFrame:
+            n_active = int(prev["active"])
+            core = supersteps(
+                state.filter(F.col("scc").isNull()).select("id"),
+                lambda core, _: _trim(lay, core),
+                {"core": F.count("*")},
+                max_trim,
+                lambda m, prev_m: m == prev_m,
+                start_metrics={"core": n_active},
+            ).state
+            fwd = _min_labels(lay, core.select("id", F.col("id").alias("lab")), n_active, True)
+            fb = _min_labels(
+                lay,
+                fwd.select("id", F.col("lab").alias("f"), F.col("id").alias("lab")),
+                n_active,
+                False,
             )
-            active.unpersist()
-            active = resumed
-            start_round = last
-    for rnd in range(start_round + 1, max_outer + 1):
-        n_active = active.count()
-        if n_active == 0:
-            break
-        e_act = (
-            e_all.join(active.select(F.col("id").alias("src_id")), "src_id", "left_semi")
-            .join(active.select(F.col("id").alias("dst_id")), "dst_id", "left_semi")
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # size-gate the trim: each trim round costs a handful of fixed-cost
-        # jobs (two distincts + semi-joins + a count), which on a big bowtie
-        # removes ~30% of vertices before the double fixpoint (measured 2.8×
-        # at 200k pages, tools/scc_probe.py) but on a small graph is pure
-        # barrier overhead (measured 5.6 s → 12.2 s on the sf0.1 bench graph)
-        trim = max_trim if n_active >= trim_min_vertices else 0
-        core_v, core_e, singles, trim_handles = _trim_trivial(
-            active, e_act, trim
-        )
-        fwd = _min_label_fixpoint(core_v, core_e, "src_id", "dst_id")
-        bwd = _min_label_fixpoint(core_v, core_e, "dst_id", "src_id")
-        done = (
-            fwd.join(bwd.select("id", F.col("lab").alias("blab")), "id")
-            .filter(F.col("lab") == F.col("blab"))
-            .select("id", F.col("lab").alias("scc"))
-            .localCheckpoint(eager=True)  # materialize BEFORE parents unpersist
-        )
-        # this round's full assignment = trim singletons + fixpoint peel
-        for s in singles:
-            done = done.unionAll(s)
-        done_parts.append(done)
-        nxt_active = (
-            active.join(done, "id", "left_anti")
-            .localCheckpoint(eager=True)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if checkpoint is not None:
-            state = nxt_active.select(
-                "id", F.lit(None).cast("long").alias("scc")
+            # merged by union + min rather than joined: a join of two
+            # checkpointed frames multiplies their size estimates, which
+            # ride along from round to round (a local checkpoint keeps its
+            # plan's statistics), so they would grow geometrically per peel
+            rows = state.withColumn("core", F.lit(False)).unionByName(
+                fb.select(
+                    "id",
+                    F.when(F.col("f") == F.col("lab"), F.col("lab")).alias("scc"),
+                    F.lit(True).alias("core"),
+                )
             )
-            for part in done_parts:
-                state = state.unionAll(part)
-            saved = checkpoint.save(state, rnd)
-            # re-anchor the accumulator on the durable snapshot so later
-            # rounds (and the final union) read parquet, not long lineage
-            done_parts = [saved.filter(F.col("scc").isNotNull())]
-            n_extracted = done_parts[0].count()
-            checkpoint.log_metrics(rnd, n_done=n_extracted)
-        fwd.unpersist()
-        bwd.unpersist()
-        for h in trim_handles:
-            h.unpersist()
-        e_act.unpersist()
-        active.unpersist()
-        active = nxt_active
-    remaining = active  # empty unless max_outer was hit
-    n_remaining = remaining.count()
-    if n_remaining > 0:
+            # an active vertex without a core row was trimmed: a singleton
+            return rows.groupBy("id").agg(
+                F.coalesce(F.min("scc"), F.when(~F.max("core"), F.col("id"))).alias("scc")
+            )
+
+        run = supersteps(
+            lay.verts.select("id", F.lit(None).cast("long").alias("scc")),
+            peel,
+            {"active": F.count_if(F.col("scc").isNull())},
+            max_outer,
+            lambda m, _: m["active"] == 0,
+            checkpoint,
+            start_metrics={"active": lay.n},
+        )
+    if run.metrics["active"]:
         # incomplete peel: surface it loudly — NULL scc rows silently
         # misbehave in downstream joins/groupBys (see docstring contract)
-        import logging
-
         logging.getLogger(__name__).warning(
             "strongly_connected_components: max_outer=%d exhausted with %d "
             "vertices unassigned; their scc is NULL in the result",
             max_outer,
-            n_remaining,
+            run.metrics["active"],
         )
-    out = done_parts[0] if done_parts else remaining.select(
-        "id", F.lit(None).cast("long").alias("scc")
-    )
-    for part in done_parts[1:]:
-        out = out.unionAll(part)
-    if done_parts and n_remaining > 0:
-        out = out.unionAll(
-            remaining.select("id", F.lit(None).cast("long").alias("scc"))
-        )
-    active.unpersist()
-    return out
+    return run.state

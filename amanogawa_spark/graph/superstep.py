@@ -4,7 +4,9 @@ North rule: every iterative superjob checkpoints lineage and metrics so
 that any iteration can be resumed. :func:`supersteps` is that discipline,
 written once, for PageRank and Katz (``graph/pagerank.py``), connected
 components (``graph/components.py``), label propagation
-(``graph/lpa.py``) and k-core peeling (``graph/kcore.py``). The caller
+(``graph/lpa.py``), k-core peeling (``graph/kcore.py``), HITS and SALSA
+(``graph/hits.py``, ``graph/salsa.py``) and strongly connected
+components (``graph/scc.py``, whose peel rounds run nested loops). The caller
 supplies the cold state, the step, the named metrics and the stop test;
 the loop owns the rest:
 
@@ -42,6 +44,7 @@ class SuperstepRun:
     state: DataFrame  # the last materialized state
     rounds: int  # the round ``state`` belongs to, resumed rounds included
     history: list[dict]  # one row per round run by this call
+    metrics: Metrics  # of ``state``: the last round's, else the start metrics
 
 
 def checkpoint_observing(
@@ -112,4 +115,4 @@ def supersteps(
         prev = got
         if stop:
             break
-    return SuperstepRun(state, rnd, history)
+    return SuperstepRun(state, rnd, history, prev)

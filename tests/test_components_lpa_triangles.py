@@ -134,30 +134,46 @@ def test_hits_star_graph(spark):
     assert res.iterations < 20  # converges immediately on a star
 
 
-def test_hits_one_collect_per_iteration(spark, monkeypatch):
-    """Regression for the round-1 finding: each HITS iteration must cost ONE
-    driver collect (normalizing sums + lagged delta folded into a single
-    aggregate), not two."""
-    # pyspark 4: the concrete (non-Connect) DataFrame lives in sql.classic
+@pytest.mark.parametrize("algo", ["hits", "salsa"])
+def test_hub_authority_one_job_per_round(spark, monkeypatch, algo):
+    """HITS and SALSA run one fixed-size plan and one job per round: jobs
+    are counted by job group over 6 fixed rounds minus the layout set-up
+    (the same call with 0 rounds), and the analyzed plan at the last
+    round's localCheckpoint is no larger than at round 2's."""
     import pyspark.sql.classic.dataframe as dfmod
 
     from amanogawa_spark.graph.hits import hits_fixed_iterations
+    from amanogawa_spark.graph.salsa import salsa_fixed_iterations
 
+    fixed = {"hits": hits_fixed_iterations, "salsa": salsa_fixed_iterations}[algo]
     edges = spark.createDataFrame(
         [(i, (i * 7 + 1) % 20) for i in range(40)], "src_id long, dst_id long"
     )
     verts = spark.createDataFrame([(i,) for i in range(20)], "id long")
+    sizes: list[int] = []
+    orig = dfmod.DataFrame.localCheckpoint
 
-    calls = {"n": 0}
-    orig = dfmod.DataFrame.collect
+    def recording(self, *args, **kwargs):
+        sizes.append(len(self._jdf.queryExecution().analyzed().toString()))
+        return orig(self, *args, **kwargs)
 
-    def counting(self):
-        calls["n"] += 1
-        return orig(self)
+    monkeypatch.setattr(dfmod.DataFrame, "localCheckpoint", recording)
+    sc = spark.sparkContext
 
-    monkeypatch.setattr(dfmod.DataFrame, "collect", counting)
-    hits_fixed_iterations(verts, edges, iterations=3)
-    assert calls["n"] == 3, f"expected 1 collect/iteration (3 total), got {calls['n']}"
+    def jobs(rounds: int) -> int:
+        group = f"{algo}-{rounds}-rounds"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            fixed(verts, edges, rounds)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    setup = jobs(0)
+    sizes.clear()
+    per_round = (jobs(6) - setup) / 6
+    assert per_round <= 1.1, (per_round, setup)
+    assert len(sizes) >= 6 and sizes[-1] <= 1.5 * sizes[1], sizes
 
 
 def test_coreness_single_peel_matches_kcore_ladder(spark):
@@ -267,7 +283,16 @@ def test_iterative_results_leave_no_cached_relations(spark):
     released before returning, so none of the iterative programs leaves a
     cached relation behind in the session's cache manager — including
     LPA stopping between checkpoint rounds and loops that converge early."""
+    from amanogawa_spark.graph.centrality import truncated_harmonic
+    from amanogawa_spark.graph.hits import hits
+    from amanogawa_spark.graph.hyperball import (
+        hyperball,
+        hyperball_closeness,
+        neighborhood_function,
+    )
     from amanogawa_spark.graph.kcore import k_core
+    from amanogawa_spark.graph.salsa import salsa
+    from amanogawa_spark.graph.scc import strongly_connected_components
 
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (6, 7), (7, 8), (8, 6)],
@@ -281,9 +306,17 @@ def test_iterative_results_leave_no_cached_relations(spark):
         ("minlabel", lambda: connected_components_minlabel(verts, edges)),
         ("label_propagation", lambda: label_propagation(verts, edges, max_rounds=3)),
         ("k_core", lambda: k_core(verts, edges, k=2)),
+        ("hits", lambda: hits(verts, edges, max_iter=5).scores),
+        ("salsa", lambda: salsa(verts, edges, max_iter=5).scores),
+        ("scc", lambda: strongly_connected_components(verts, edges)),
+        ("hyperball", lambda: hyperball(verts, edges)),
+        ("hyperball_closeness", lambda: hyperball_closeness(verts, edges, max_radius=3)),
+        ("neighborhood_function", lambda: neighborhood_function(verts, edges, max_radius=3)),
+        ("truncated_harmonic", lambda: truncated_harmonic(verts, edges)),
     ):
         before = cache.numCachedEntries()
-        assert run().count() > 0, name
+        out = run()
+        assert (len(out) if isinstance(out, list) else out.count()) > 0, name
         if cache.numCachedEntries() != before:
             leaked.append(name)
     assert leaked == []

@@ -101,6 +101,40 @@ def test_scc_resume_from_checkpoint(spark, tmp_path):
         for r in strongly_connected_components(v, e, checkpoint=ckpt).collect()
     }
     assert resumed == full == tarjan_scc(n, edges)
+    # the journal holds one row per outer round, each with its active count
+    rows = ckpt.read_metrics()
+    assert [r["iteration"] for r in rows] == list(range(1, len(rows) + 1))
+    assert len(rows) >= 2 and all("active" in r for r in rows)
+    assert rows[-1]["active"] == 0 < rows[0]["active"]
+
+
+def test_scc_trim_path_matches_tarjan(spark, tmp_path):
+    """The trim path and, with ``max_trim=0``, the bare double fixpoint
+    both give Tarjan's answer; on a 4-vertex path the trim peels every
+    vertex in the first outer round, where the fixpoint alone peels one
+    vertex per round."""
+    from amanogawa_spark.checkpoint import CheckpointManager
+
+    bridge = {(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3), (5, 6)}
+    for n, edges in [
+        (60, _random_digraph(60, 1.2, 1)),
+        (60, _random_digraph(60, 2.5, 2)),
+        (7, bridge),
+    ]:
+        e = spark.createDataFrame(sorted(edges), "src_id long, dst_id long")
+        v = spark.createDataFrame([(i,) for i in range(n)], "id long")
+        for max_trim in (5, 0):
+            got = strongly_connected_components(v, e, max_trim=max_trim).collect()
+            assert {r.id: r.scc for r in got} == tarjan_scc(n, edges), (n, max_trim)
+
+    path = {(0, 1), (1, 2), (2, 3)}
+    e = spark.createDataFrame(sorted(path), "src_id long, dst_id long")
+    v = spark.createDataFrame([(i,) for i in range(4)], "id long")
+    for max_trim, rounds in ((5, 1), (0, 4)):
+        ckpt = CheckpointManager(spark, str(tmp_path / f"trim{max_trim}"))
+        got = strongly_connected_components(v, e, max_trim=max_trim, checkpoint=ckpt)
+        assert {r.id: r.scc for r in got.collect()} == tarjan_scc(4, path)
+        assert len(ckpt.read_metrics()) == rounds, max_trim
 
 
 def test_scc_two_cycles_with_dag_bridge(spark):
